@@ -288,7 +288,8 @@ class TableStore:
         commits as the next version, so readers of the old snapshot are
         unaffected and time travel still sees the pre-merge table.
 
-        `deletes` needs only the key columns. `sort_within` re-applies the
+        `deletes` needs only the key columns; `updates` may carry no column
+        the table lacks (ValueError, not a silent drop). `sort_within` re-applies the
         original writer's in-file clustering (same contract as `compact` —
         without it a merged layer table would lose row-group pruning).
         First merge into a missing table degenerates to a plain write.
@@ -336,6 +337,9 @@ class TableStore:
         missing = [k for k in key_cols if k not in cur.columns]
         if missing:
             raise ValueError(f"merge keys absent from table: {missing}")
+        extra = [c for c in updates.columns if c not in cur.columns]
+        if extra:
+            raise ValueError(f"update columns absent from table {name!r}: {extra}")
         survivors = cur.join(updates.select(*key_cols).distinct(), key_cols, "left_anti")
         if deletes is not None:
             survivors = survivors.join(

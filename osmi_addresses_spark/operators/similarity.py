@@ -26,11 +26,7 @@ Centroid construction, two modes:
 At 100 TB the same plan holds: centroids are a broadcast-sized side
 (nlist·dim doubles), assignment is a narrow map, and the probe join is an
 equi-join on centroid id — shuffle volume scales with the bucketed
-candidates only. At EXTREME nlist (≈√N on 10¹² vectors: ~10⁶ × dim 768 ≈
-6 GB) even that per-iteration collect+broadcast is a driver cliff —
-``distributed_kmeans_centroids_store`` keeps the centroids in parquet
-between iterations (distributed write, executor-side load), so the driver
-holds only paths and slim seed keys.
+candidates only.
 """
 
 from __future__ import annotations
@@ -270,173 +266,6 @@ def distributed_kmeans_centroids(
         new_cn[nz] = acc[nz] / counts[nz, None]
         cn = _unit_rows(new_cn)
     return cn
-
-
-# executor-side cache: centroid parquet path -> matrix (one load per worker
-# process per iteration; paths are unique per iteration so entries never
-# go stale)
-_CENTROID_CACHE: dict[str, np.ndarray] = {}
-
-
-def _load_centroid_matrix(path: str) -> np.ndarray:
-    m = _CENTROID_CACHE.get(path)
-    if m is None:
-        import pyarrow.dataset as pds
-
-        t = pds.dataset(path, format="parquet").to_table(columns=["centroid", "v"])
-        cid = t.column("centroid").to_numpy()
-        col = t.column("v").combine_chunks()
-        offs = col.offsets.to_numpy().astype(np.int64)
-        vals = np.asarray(col.values, dtype=np.float64)
-        dim = int(offs[1] - offs[0])
-        rows = vals[offs[0] : offs[-1]].reshape(-1, dim)
-        m = np.zeros((int(cid.max()) + 1, dim))
-        m[cid] = rows
-        _CENTROID_CACHE.clear()  # keep at most the current iteration's matrix
-        _CENTROID_CACHE[path] = m
-    return m
-
-
-def distributed_kmeans_centroids_store(
-    embeddings: DataFrame,
-    nlist: int,
-    store_dir: str,
-    iters: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> str:
-    """Store-resident Lloyd refinement for extreme nlist (VERDICT r4 nit 2):
-    the centroid matrix NEVER passes through the driver. At nlist ≈ √N on
-    10¹² vectors (nlist ~10⁶ × dim 768 ≈ 6 GB of doubles) the in-memory
-    variant's per-iteration collect+broadcast is a driver-memory cliff; here
-    each iteration's update is a distributed aggregate written straight to
-    parquet, and the next assignment's executors load the matrix from that
-    parquet themselves (`_load_centroid_matrix`, one read per worker process
-    amortized over its tasks). The driver holds only file paths and ≤ nlist
-    slim (md5, id) seed keys.
-
-    Same math as ``distributed_kmeans_centroids`` (seed set identical by
-    construction; per-iteration mean and row normalization are elementwise
-    double ops in both), so the final centroids agree to reduction-order
-    rounding (~1 ulp — the distributed sums are order-nondeterministic in
-    BOTH variants). Returns the final centroid parquet path with columns
-    (centroid int, v array<double>), rows unit-normalized.
-    """
-    spark = embeddings.sparkSession
-    slim = embeddings.select(
-        F.md5(F.col(id_col).cast("string")).alias("h"), F.col(id_col).alias("i")
-    )
-    n = slim.count()
-    if n == 0:
-        raise ValueError("distributed_kmeans_centroids_store: embeddings table is empty")
-    winners = _seed_winners(slim, nlist, n)
-    kmax_h, kmax_i = winners[-1]["h"], winners[-1]["i"]
-    k = len(winners)
-    # seed parquet: the winning rows ranked into centroid ids 0..k-1. The
-    # global-order window runs over ≤ k rows (the cutoff filter), not the
-    # table — a single small task at any table size.
-    w = Window.orderBy("h", "i")
-    seed = (
-        embeddings.select(
-            F.md5(F.col(id_col).cast("string")).alias("h"),
-            F.col(id_col).alias("i"),
-            F.col(vec_col).cast(T.ArrayType(T.DoubleType())).alias("v"),
-        )
-        .filter(
-            (F.col("h") < kmax_h)
-            | ((F.col("h") == kmax_h) & (F.col("i") <= F.lit(kmax_i)))
-        )
-        .withColumn("centroid", (F.row_number().over(w) - 1).cast("int"))
-        .filter(F.col("centroid") < k)
-        .select("centroid", "v")
-    )
-    cur = f"{store_dir}/iter_0"
-    seed.write.mode("overwrite").parquet(cur)
-
-    src = embeddings.select(F.col(id_col).alias("n_id"), F.col(vec_col).alias("nv"))
-    partial_schema = T.StructType(
-        [
-            T.StructField("centroid", T.IntegerType()),
-            T.StructField("cnt", T.LongType()),
-            T.StructField("vsum", T.ArrayType(T.DoubleType())),
-        ]
-    )
-
-    for it in range(iters):
-        def partials(batches: Iterator[pa.RecordBatch], _path=cur):
-            cn = _load_centroid_matrix(_path)
-            cu = _unit_rows(cn)
-            dim = cn.shape[1]
-            for batch in batches:
-                if not batch.num_rows:
-                    continue
-                col = batch.column("nv")
-                if isinstance(col, pa.ChunkedArray):
-                    col = col.combine_chunks()
-                offs = col.offsets.to_numpy().astype(np.int64)
-                vals = np.asarray(col.values, dtype=np.float64)
-                m = vals[offs[0] : offs[-1]].reshape(-1, dim)
-                mu = _unit_rows(m)
-                assign = np.argmax(mu @ cu.T, axis=1)
-                ids = np.unique(assign)
-                sums = np.zeros((len(ids), dim))
-                cnts = np.zeros(len(ids), dtype=np.int64)
-                for j, c in enumerate(ids):
-                    sel = assign == c
-                    sums[j] = mu[sel].sum(axis=0)
-                    cnts[j] = int(sel.sum())
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(ids.astype(np.int32)),
-                        pa.array(cnts),
-                        pa.array(list(sums), pa.list_(pa.float64())),
-                    ],
-                    names=["centroid", "cnt", "vsum"],
-                )
-
-        agg = (
-            src.mapInArrow(partials, partial_schema)
-            .select("centroid", "cnt", F.posexplode("vsum").alias("pos", "x"))
-            .groupBy("centroid", "pos")
-            .agg(F.sum("cnt").alias("n"), F.sum("x").alias("s"))
-            .groupBy("centroid")
-            .agg(
-                F.max("n").alias("n"),
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "s"))),
-                    lambda t: t["s"],
-                ).alias("vsum"),
-            )
-        )
-        prev = spark.read.parquet(cur)
-        # mean where the cluster got rows, previous centroid otherwise;
-        # then unit-normalize every row (mirrors cn = _unit_rows(new_cn))
-        mean = F.when(
-            F.col("n") > 0,
-            F.transform(F.col("vsum"), lambda x: x / F.col("n").cast("double")),
-        ).otherwise(F.col("v"))
-        norm_expr = F.sqrt(
-            F.aggregate(F.col("m"), F.lit(0.0), lambda acc, x: acc + x * x)
-        )
-        nxt = f"{store_dir}/iter_{it + 1}"
-        (
-            prev.join(agg, "centroid", "left")
-            .select("centroid", mean.alias("m"))
-            .select("centroid", "m", norm_expr.alias("nrm"))
-            .select(
-                "centroid",
-                F.when(
-                    F.col("nrm") > 0,
-                    F.transform(F.col("m"), lambda x: x / F.col("nrm")),
-                )
-                .otherwise(F.col("m"))
-                .alias("v"),
-            )
-            .write.mode("overwrite")
-            .parquet(nxt)
-        )
-        cur = nxt
-    return cur
 
 
 def ann_ivf_topk(

@@ -83,8 +83,10 @@ def hll_merge(parts: list[DataFrame], group_cols: list[str]) -> DataFrame:
     Exactly the mergeability law that lets HLL state combine across
     executors, days, or streams without revisiting raw data:
     merge(regs(A), regs(B)) == regs(A ∪ B) register-for-register.
-    Feed the result to the same estimator as hll_distinct (see
-    _hll_estimate_from_regs)."""
+    Feed the result to the same estimator as hll_distinct
+    (hll_estimate_from_registers)."""
+    if not parts:
+        raise ValueError("hll_merge needs at least one register set")
     merged = parts[0]
     for p in parts[1:]:
         merged = merged.unionByName(p)
@@ -183,6 +185,8 @@ def cms_merge(parts: list[DataFrame]) -> DataFrame:
     mergeability law (merge(cms(A), cms(B)) == cms(A ⊎ B) counter-for-
     counter, A ⊎ B the multiset union), which is what lets per-partition /
     per-day sketches combine without re-reading the stream."""
+    if not parts:
+        raise ValueError("cms_merge needs at least one sketch")
     merged = parts[0]
     for p in parts[1:]:
         merged = merged.unionByName(p)

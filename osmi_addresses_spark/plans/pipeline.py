@@ -56,18 +56,14 @@ def track_persists():
 
 
 def _persist(df: DataFrame) -> DataFrame:
-    """Shared-intermediate persistence (MEMORY_AND_DISK by default — with
-    the session's off-heap Tungsten memory the cached columnar batches stay
-    out of the GC'd heap; on-heap caching of the ~9 GB of shared
-    intermediates at sf10 kept the old gen full and made every match stage
-    GC-bound, 721 s GC in one 1286 s stage). SPARK_GRAFT_CACHE_LEVEL
-    overrides (e.g. DISK_ONLY for memory-constrained executors)."""
+    """Shared-intermediate persistence at MEMORY_AND_DISK: with the
+    session's off-heap Tungsten memory the cached columnar batches stay out
+    of the GC'd heap (on-heap caching of the ~9 GB of shared intermediates
+    at sf10 kept the old gen full and made every match stage GC-bound, 721 s
+    GC in one 1286 s stage)."""
     from pyspark import StorageLevel
 
-    level = getattr(
-        StorageLevel, os.environ.get("SPARK_GRAFT_CACHE_LEVEL", "MEMORY_AND_DISK")
-    )
-    out = df.persist(level)  # way's own match comes after its interp points
+    out = df.persist(StorageLevel.MEMORY_AND_DISK)
     tracker = _PERSIST_TRACKER
     if tracker is not None:
         tracker.append(out)
@@ -81,7 +77,8 @@ def run_all(
     source_path: str | None = None,
     entities: DataFrame | None = None,
 ) -> dict[str, DataFrame]:
-    """Build every layer DataFrame. Lazy — callers trigger execution.
+    """Build every layer DataFrame, the six MapServer views and the shared
+    intermediates they are built from. Lazy — callers trigger execution.
 
     With a TableStore, the parsed entities are checkpointed to parquet
     partitioned by entity type: every downstream consumer gets a
@@ -297,6 +294,17 @@ def run_all(
     )
 
     out: dict[str, DataFrame] = {
+        # shared intermediates (the oracle-checked geo queries select these too)
+        "entities": entities,
+        "nodes": nodes,
+        "ways_geo": ways_geo,
+        "ways_p2": ways_p2,
+        "streets": f_streets_idx.result(),
+        "places": f_places_idx.result(),
+        "street_matches": street_matches,
+        "place_matches": place_matches,
+        "ip_points": ip_points,
+        # the 11 layers; the six MapServer views follow
         "connection_line": L.connection_line(street_matches, place_matches),
         "nearest_points": L.nearest_points(street_matches),
         "nearest_roads": L.nearest_roads(street_matches, ways_geo),

@@ -1,2 +1,1 @@
-from .documents import load_documents  # noqa: F401
 from .parser import parse_documents, serialize_entities, nodes_view, ways_view  # noqa: F401

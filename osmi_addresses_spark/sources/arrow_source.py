@@ -10,7 +10,7 @@ JVM→Python IPC leg. On the virtualized bench box (where total memory
 traffic is the scaling ceiling) this measurably reduces kernel time.
 
 Replaces nothing semantically: `parsed_documents(spark, path)` ≡
-`parse_documents(load_documents(spark, path), minimal=True)` row-for-row.
+`parse_documents(spark.read.parquet(path), minimal=True)` row-for-row.
 The reference's streaming OSM scan is SURVEY.md §2.1 S1 (osmi/main.cpp:73-97);
 partition planning below is the distributed analog of its single sequential
 pass: one task per ~`target_bytes` of row groups, every row group covered

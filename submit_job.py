@@ -122,7 +122,7 @@ def main(argv=None):
             spark,
             args.merge_into,
             updates,
-            args.merge_keys.split(","),
+            [k.strip() for k in args.merge_keys.split(",")],
             deletes=deletes,
         )
         print(json.dumps({"merged": {args.merge_into: path}}))

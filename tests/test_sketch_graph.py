@@ -217,6 +217,15 @@ def test_cms_merge_equals_multiset_union(spark):
     assert as_set(merged) == as_set(direct)
 
 
+def test_sketch_merge_rejects_empty_parts():
+    from osmi_addresses_spark.operators.sketch import cms_merge, hll_merge
+
+    with pytest.raises(ValueError):
+        hll_merge([], ["grp"])
+    with pytest.raises(ValueError):
+        cms_merge([])
+
+
 def test_stream_hll_across_batches(spark, tmp_path):
     # two file drops, one checkpoint: complete-mode streaming agg must
     # carry register state across restarts and end bit-identical to the

@@ -159,3 +159,26 @@ def test_submit_merge_mode(spark, tmp_path):
     got = {(r["k"], r["name"]) for r in store.read(spark, "users").collect()}
     assert got == {(2, "B"), (3, "c")}
     assert store.versions("users") == [1, 2]
+
+
+def test_submit_merge_keys_strip_whitespace(spark, tmp_path):
+    from osmi_addresses_spark.io.table import TableStore
+
+    wh = str(tmp_path / "wh")
+    store = TableStore(wh)
+    store.write(
+        "pairs",
+        spark.createDataFrame([(1, 1, "a"), (1, 2, "b")], ["k", "j", "name"]),
+    )
+    ups = str(tmp_path / "ups")
+    spark.createDataFrame([(1, 2, "B")], ["k", "j", "name"]).write.parquet(ups)
+    import submit_job
+
+    rc = submit_job.main([
+        "--input", ups, "--output", wh,
+        "--merge-into", "pairs", "--merge-keys", "k, j",
+    ])
+    assert not rc
+    got = {(r["k"], r["j"], r["name"]) for r in store.read(spark, "pairs").collect()}
+    assert got == {(1, 1, "a"), (1, 2, "B")}
+    assert store.manifest("pairs")["lineage"]["last_merge"]["keys"] == ["k", "j"]

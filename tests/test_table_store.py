@@ -265,3 +265,14 @@ def test_merge_rejects_bad_updates(spark, tmp_path):
     store.merge(spark, "fresh2", spark.createDataFrame([(1, "a")], ["k", "name"]), ["k"])
     m = store.manifest("fresh2")
     assert m["lineage"]["last_merge"] == {"keys": ["k"], "deletes": False}
+
+
+def test_merge_rejects_update_columns_the_table_lacks(spark, tmp_path):
+    import pytest
+
+    store = TableStore(str(tmp_path / "wh"))
+    store.write("t", spark.createDataFrame([(1, "a")], ["k", "name"]))
+    ups = spark.createDataFrame([(1, "A", 9)], ["k", "name", "extra"])
+    with pytest.raises(ValueError, match="extra"):
+        store.merge(spark, "t", ups, ["k"])
+    assert store.versions("t") == [1]
