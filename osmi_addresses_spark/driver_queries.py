@@ -59,7 +59,7 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _run(spark: SparkSession, sf_dir: str) -> tuple[dict[str, DataFrame], TableStore]:
     """The shipped pipeline over the fixture, built once per fixture the way
-    submit_job builds it (TableStore checkpoints in a temp dir, worker-side
+    submit_job builds it (TableStore checkpoints in a temp dir, mapInArrow
     parse of the documents parquet): (run_all's layers, views and shared
     intermediates, the store). Every geo query selects from it."""
     fx = fixture_path(sf_dir)
@@ -2857,10 +2857,10 @@ def q_bloom_semi_join(spark, sf_dir):
     """Bloom-prefiltered semi-join: lineitem rows whose l_partkey MIGHT be
     in the small-parts build side (p_size ≤ 5), m=8192 bits / k=3 md5
     hashes, aggregated per return flag with the (deterministic) false-
-    positive count broken out. The probe table is never shuffled: the set
-    bits broadcast and membership is k chained broadcast LEFT SEMI joins —
-    the build-side-prefilter pattern a 100 TB scan wants before an
-    expensive join."""
+    positive count broken out. The probe table is never shuffled: the
+    build side's set bits are collected to the driver and membership is k
+    `isin` filters on the probe scan — the build-side-prefilter pattern a
+    100 TB scan wants before an expensive join."""
     from .operators.sketch import bloom_semi_join
 
     li = _t(spark, sf_dir, "lineitem")
@@ -4204,7 +4204,12 @@ def q_market_basket(spark, sf_dir):
     (lift = N·n_ab / (n_a·n_b), carried as 1e6·… div …). The frequent-
     itemset primitive; the pair self-join is keyed on l_orderkey (small
     per-order item lists bound the blowup), everything else is counting.
-    Pairs with support < 2 are cut to keep the output meaningful."""
+    Pairs with support < 2 are cut to keep the output meaningful.
+    Exactness bound: both engines evaluate lift_micro in int64, so it is
+    exact while n_ab·N·10⁶ < 2⁶³, i.e. n_ab·N < ~9.2×10¹². Since
+    n_ab ≤ N, every input with N ≤ 3×10⁶ orders is inside it. Past the
+    bound both engines raise an overflow error (Spark's ANSI arithmetic,
+    DuckDB's checked BIGINT) instead of returning a wrong lift."""
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
     n_orders = _t(spark, sf_dir, "orders").select("o_orderkey").distinct().count()
     a = li.select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("pa"))

@@ -154,7 +154,11 @@ def interpolation_plan(ways_geo: DataFrame, nodes: DataFrame) -> tuple[DataFrame
         .withColumn("last_v", last_v)
         .withColumn("first_numeric", F.when(is_alpha_correct, first_numeric).otherwise(F.lit("")))
     )
-    ip = ip.cache()
+    # persisted through the pipeline's tracker (call-time import: the
+    # pipeline module imports this one), so track_persists callers release it
+    from ..plans.pipeline import _persist
+
+    ip = _persist(ip)
 
     layer = ip.select(
         G.fmt_id(F.col("way_id")).alias("way_id"),

@@ -14,8 +14,8 @@ Scale properties (the reason a 100 TB pipeline wants sketches at all):
   O(2^p) rows per group where exact COUNT(DISTINCT) shuffles every distinct
   value.
 - Bloom: the build side collapses to ≤ min(k·|build|, m_bits) distinct bit
-  positions — small enough to broadcast — and the probe side is filtered by
-  k chained broadcast LEFT SEMI joins, so the big table is never shuffled.
+  positions, collected to the driver, and the probe side is filtered by k
+  `isin` membership tests in one scan, so the big table is never shuffled.
   False positives are deterministic (same md5 bits in engine and oracle).
 """
 

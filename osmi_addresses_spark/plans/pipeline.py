@@ -14,7 +14,6 @@ is AQE-skew-protected and salted by cell construction.
 from __future__ import annotations
 
 import contextlib
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -28,7 +27,6 @@ from ..operators.nearest_place import match_places
 from ..operators.nearest_street import match_streets
 from ..operators.places import build_places_index
 from ..operators.streets import build_streets_index
-from ..sources.arrow_source import parsed_documents
 from ..sources.parser import nodes_view, parse_documents, ways_view
 
 WAY_CENTROID_ORD2 = 1 << 42
@@ -80,64 +78,20 @@ def run_all(
     """Build every layer DataFrame, the six MapServer views and the shared
     intermediates they are built from. Lazy — callers trigger execution.
 
-    With a TableStore, the parsed entities are checkpointed to parquet
-    partitioned by entity type: every downstream consumer gets a
+    There is one parse path: pre-parsed ``entities`` (e.g.
+    sources/osm_xml.read_osm_xml) win, else ``documents`` are parsed by
+    ``parse_documents(documents, minimal=True)`` (mapInArrow on the Python
+    workers). With a TableStore, the parsed entities are checkpointed to
+    parquet partitioned by entity type: every downstream consumer gets a
     column-pruned, partition-pruned scan instead of an in-memory cache that
     AQE's concurrent stage materialization would rebuild several times.
     This is the 100 TB configuration; the cache path is for small inputs.
     """
+    parsed = entities if entities is not None else parse_documents(documents, minimal=True)
     if store is not None:
-
-        def _is_documents_schema(pq_path: str) -> bool:
-            """Footer-only check that a parquet file has the documents shape
-            (doc_id + spans) before feeding it to the worker-side parser —
-            a warehouse-style directory of unrelated parquet must fall
-            through to the generic parse_documents path, not fail late with
-            an opaque parse error."""
-            try:
-                import pyarrow.parquet as _pq
-
-                names = set(_pq.ParquetFile(pq_path).schema_arrow.names)
-                return {"doc_id", "spans"} <= names
-            except Exception:
-                return False
-
-        def _docs_parquet() -> str | None:
-            """The documents parquet under source_path: either the path
-            itself (submit_job --input) or <path>/documents.parquet
-            (fixture/testdata layout), schema-validated via a footer read."""
-            if not source_path:
-                return None
-            for cand in (os.path.join(source_path, "documents.parquet"), source_path):
-                if os.path.isfile(cand) and cand.endswith(".parquet"):
-                    if _is_documents_schema(cand):
-                        return cand
-                    continue
-                if os.path.isdir(cand):
-                    pfiles = [
-                        os.path.join(cand, f)
-                        for f in sorted(os.listdir(cand))
-                        if f.endswith(".parquet")
-                    ]
-                    if pfiles and _is_documents_schema(pfiles[0]):
-                        return cand
-            return None
-
-        def _entities():
-            # pre-parsed entities (e.g. sources/osm_xml.read_osm_xml) win;
-            # else worker-side read+parse (sources/arrow_source.py) when the
-            # input is a parquet path: skips the JVM nested-parquet decode
-            # and one Arrow IPC leg; identical rows to parse_documents.
-            if entities is not None:
-                return entities
-            doc_pq = _docs_parquet()
-            if doc_pq:
-                return parsed_documents(spark, doc_pq)
-            return parse_documents(documents, minimal=True)
-
         store.write_once(
             "entities",
-            _entities,
+            lambda: parsed,
             source_path=source_path,
             partition_by=["entity"],
         )
@@ -154,9 +108,7 @@ def run_all(
         )
         ways_geo = store.read(spark, "ways_geo")
     else:
-        entities = _persist(
-            entities if entities is not None else parse_documents(documents, minimal=True)
-        )
+        entities = _persist(parsed)
         nodes = nodes_view(entities)
         ways = ways_view(entities)
         ways_geo = _persist(assemble_way_geometries(ways, nodes))
@@ -344,11 +296,23 @@ def write_layers(layers: dict[str, DataFrame], store, layer_names=None) -> dict[
     analog), clustered by grid cell within files so min/max parquet column
     stats replace the reference's deferred R-tree build
     (create_spatial_indices.sh:19-37). Transaction batching (osmi/Writer.hpp:
-    83-91) maps to parquet row groups; the manifest is the commit."""
+    83-91) maps to parquet row groups; the manifest is the commit.
+
+    The layers are independent sinks, so each write is submitted to a
+    thread pool with one thread per layer: their Spark jobs, driver-side
+    planning and commits overlap, and jobs that read the same cached
+    intermediate (street/place matches, NWA) share its blocks instead of
+    building them twice. Each table still commits atomically on its own.
+    Returns the paths in the requested order. If a write fails, the first
+    failure (in that order) is re-raised once every started write has
+    finished; the other layers stay committed."""
+    # imported at call time so a caller can swap the executor (perfbench's
+    # traced runs use a serial one so that spans never overlap)
+    from concurrent.futures import ThreadPoolExecutor
+
     from ..schemas import LAYER_NAMES
 
-    paths = {}
-    for name in layer_names or LAYER_NAMES:
+    def _write(name: str) -> str:
         df = layers[name]
         if "geom" in df.columns:
             if df.schema["geom"].dataType.typeName() != "struct":
@@ -367,5 +331,9 @@ def write_layers(layers: dict[str, DataFrame], store, layer_names=None) -> dict[
                 )
             sort_cell = layer_cluster_expr(df)
             df = df.withColumn("_cell", sort_cell).sortWithinPartitions("_cell").drop("_cell")
-        paths[name] = store.write(f"layer_{name}", df)
-    return paths
+        return store.write(f"layer_{name}", df)
+
+    names = list(layer_names or LAYER_NAMES)
+    with ThreadPoolExecutor(max_workers=len(names)) as pool:
+        futures = [(name, pool.submit(_write, name)) for name in names]
+    return {name: fut.result() for name, fut in futures}

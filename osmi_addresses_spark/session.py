@@ -166,9 +166,9 @@ def warm_driver_plans(spark: SparkSession) -> None:
     tmp = tempfile.mkdtemp(prefix="osmi_warm_")
     rdds_before = _persistent_rdd_ids(spark)
     try:
-        # store path: exercises the worker-side parquet parse
-        # (arrow_source), write_once committer classes, and TableStore
-        # read-back — the exact classes the timed run's first phase loads
+        # store path: exercises the mapInArrow parse of a documents
+        # parquet, write_once committer classes, and TableStore read-back —
+        # the exact classes the timed run's first phase loads
         with track_persists() as warm_persists:
             docs_pq = f"{tmp}/documents.parquet"
             docs.write.parquet(docs_pq)

@@ -47,15 +47,63 @@ def test_crash_leaves_no_manifest(spark, tmp_path):
 
 
 def test_write_layers_end_to_end(spark, small_docs, tmp_path):
+    """The concurrent sinks commit every requested layer, with each
+    manifest's row count equal to its layer's, and return the paths in
+    the requested order."""
     from osmi_addresses_spark.plans.pipeline import run_all, write_layers
+    from osmi_addresses_spark.schemas import LAYER_NAMES
 
     store = TableStore(str(tmp_path / "wh"))
     layers = run_all(spark, small_docs)
-    paths = write_layers(layers, store, layer_names=["entrances", "nearest_points"])
-    for name, p in paths.items():
+    names = list(reversed(LAYER_NAMES))
+    paths = write_layers(layers, store, layer_names=names)
+    assert list(paths) == names
+    for name in names:
         m = store.manifest(f"layer_{name}")
-        assert m is not None
+        assert paths[name].endswith(m["version_dir"])
+        rows = sum(p["rows"] for p in m["partitions"].values())
+        assert rows == layers[name].count() == store.read(spark, f"layer_{name}").count(), name
+
+
+def test_write_layers_failure_propagates_and_others_commit(spark, small_docs, tmp_path):
+    """One failing sink raises out of write_layers; the other sinks, which
+    ran concurrently with it, are still committed and readable."""
+    import pytest
+
+    from osmi_addresses_spark.plans.pipeline import run_all, write_layers
+
+    class FailingStore(TableStore):
+        def write(self, name, df, *args, **kwargs):
+            if name == "layer_entrances":
+                raise RuntimeError("disk full")
+            return super().write(name, df, *args, **kwargs)
+
+    store = FailingStore(str(tmp_path / "wh"))
+    layers = run_all(spark, small_docs)
+    names = ["nearest_points", "entrances", "ways_with_addresses"]
+    with pytest.raises(RuntimeError, match="disk full"):
+        write_layers(layers, store, layer_names=names)
+    assert store.manifest("layer_entrances") is None
+    for name in ("nearest_points", "ways_with_addresses"):
         assert store.read(spark, f"layer_{name}").count() == layers[name].count()
+
+
+def test_tracked_pipeline_leaves_no_persistent_rdd(spark, small_docs, tmp_path):
+    """Every cache run_all + write_layers create goes through
+    track_persists, so unpersisting the tracked list releases them all."""
+    from osmi_addresses_spark.plans.pipeline import run_all, track_persists, write_layers
+
+    def persistent_rdds():
+        jmap = spark.sparkContext._jsc.getPersistentRDDs()
+        return {e.getKey() for e in jmap.entrySet().toArray()}
+
+    before = persistent_rdds()
+    store = TableStore(str(tmp_path / "wh"))
+    with track_persists() as tracked:
+        write_layers(run_all(spark, small_docs, store=store), store)
+    for df in tracked:
+        df.unpersist()
+    assert persistent_rdds() - before == set()
 
 
 def test_versioned_snapshots_time_travel(spark, tmp_path):
