@@ -113,12 +113,6 @@ def is_point_near_bbox(
 
 
 # ------------------------------------------------- vertex distance & refine
-def min_vertex_dist(lons: np.ndarray, lats: np.ndarray, plon: float, plat: float) -> float:
-    """Degree-space distance from point to the way's *vertices* (used by the
-    foot-point refine's closest-node scan, not for way selection)."""
-    return float(np.min(np.hypot(lons - plon, lats - plat)))
-
-
 def min_segment_dist(lons: np.ndarray, lats: np.ndarray, plon: float, plat: float) -> float:
     """GEOS point-to-linestring distance in degree space — the way-selection
     metric (OGRLineString::Distance → GEOS distancePointLine,
@@ -143,31 +137,6 @@ def min_segment_dist(lons: np.ndarray, lats: np.ndarray, plon: float, plat: floa
         if d < best:
             best = d
     return best
-
-
-def closest_vertex_idx(xs: np.ndarray, ys: np.ndarray, px: float, py: float) -> int:
-    """First index of minimal distance (strict '<' scan,
-    osmi/ConnectionLinePreprocessor.hpp:283-306)."""
-    d = np.hypot(xs - px, ys - py)
-    return int(np.argmin(d))  # argmin returns first occurrence == strict < scan
-
-
-def _closest_point_on_segment(ax, ay, bx, by, px, py) -> tuple[float, float]:
-    """Clamped scalar projection (osmi/ConnectionLinePreprocessor.hpp:343-364).
-
-    r in (0,1) is realized through OGR Value(r*length) — linear interpolation
-    along the 2-point segment, identical to a + r*(b-a) up to float order; we
-    mirror the Value() arithmetic (fraction of cumulative length).
-    """
-    denom = (bx - ax) ** 2 + (by - ay) ** 2
-    r = ((px - ax) * (bx - ax) + (py - ay) * (by - ay)) / denom
-    if r < 0:
-        return ax, ay
-    if r > 1:
-        return bx, by
-    # Value(r*L) on a single segment: a + (r*L)/L * (b-a); L cancels but the
-    # float op order in GDAL is dist/L then lerp — reproduce via r directly.
-    return ax + r * (bx - ax), ay + r * (by - ay)
 
 
 def refine_foot_points_batch(
@@ -254,12 +223,6 @@ def refine_foot_point(
 
 
 # ---------------------------------------------------------- linear reference
-def line_length(lons: np.ndarray, lats: np.ndarray) -> float:
-    """Planar length in the current CRS (degrees here) —
-    osmi/InterpolationWriter.hpp:166 get_Length()."""
-    return float(np.hypot(np.diff(lons), np.diff(lats)).sum())
-
-
 def value_along_multi(
     lons: np.ndarray, lats: np.ndarray, dists: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray]:

@@ -7,15 +7,13 @@ Provides the north-rule requirements:
 - atomic per-table commit (manifest written last, via tempfile rename),
 - per-partition lineage + row-count metrics in the manifest,
 - resumable re-runs: `write_once` skips tables whose manifest matches the
-  input fingerprint (a re-run after a crash recomputes only missing tables),
+  input fingerprint (a re-run after a crash recomputes only missing tables);
+  with no input to fingerprint it always writes,
 - versioned snapshots (Iceberg's snapshot model in miniature): every write
-  lands in a fresh `<table>.snapshots/v000NN` directory (a sibling of the
-  pre-versioning flat layout, so even a legacy reader never lists a
-  half-written version) and the pointer manifest
-  flips to it atomically LAST — the previous committed version is never
-  touched, so a crash mid-write leaves the prior snapshot fully readable
-  (the old layout rmtree'd committed data before re-writing: a crash there
-  lost the table). `read(..., version=N)` time-travels, `versions()`
+  lands in a fresh `<table>.snapshots/v000NN` directory and the pointer
+  manifest flips to it atomically LAST — the previous committed version is
+  never touched, so a crash mid-write leaves the prior snapshot fully
+  readable. `read(..., version=N)` time-travels, `versions()`
   lists snapshots, `vacuum(keep=K)` retires old data dirs, and
   `compact()` rewrites the current snapshot into ~target-size files as a
   new version (small-file compaction — at 100 TB the file count, not the
@@ -59,21 +57,15 @@ class TableStore:
         os.makedirs(root, exist_ok=True)
 
     def _snapdir(self, name: str) -> str:
-        """The table's snapshot container, a SIBLING of the legacy flat
-        data dir — a new version is never staged inside a directory a
-        legacy reader is resolving, so there is no window in which such a
-        reader lists old and new part files together."""
+        """The table's snapshot container, holding one `v000NN` data dir
+        per version."""
         return os.path.join(self.root, f"{name}.snapshots")
 
     def _dir(self, name: str, version: int | None = None) -> str:
-        """Data directory of a snapshot (default: the current one). Tables
-        written before versioning (manifest without a `version` key) keep
-        resolving to the legacy flat layout — but an explicit `version`
-        request on one raises rather than silently returning current
-        data."""
+        """Data directory of a snapshot (default: the current one)."""
         m = self.manifest(name)
         if version is None:
-            if m is None or "version" not in m:
+            if m is None:
                 return os.path.join(self.root, name)
             return os.path.join(self.root, m["version_dir"])
         snaps = (m or {}).get("snapshots", {})
@@ -118,7 +110,7 @@ class TableStore:
         prior snapshot fully readable (an orphaned half-written version
         dir is reclaimed by the next write attempt or `vacuum`)."""
         prev = self.manifest(name)
-        ver = (prev.get("version", 0) if prev else 0) + 1
+        ver = (prev["version"] if prev else 0) + 1
         rel = f"{name}.snapshots/v{ver:05d}"
         path = os.path.join(self.root, rel)
         if os.path.exists(path):  # crashed earlier attempt at this version
@@ -140,10 +132,6 @@ class TableStore:
             w = w.partitionBy(*partition_by)
         w.parquet(path)
         elapsed = round(time.time() - t0, 3)
-        if os.environ.get("SPARK_GRAFT_PHASE_LOG"):
-            import sys
-
-            print(f"[table] {name}: {elapsed}s", file=sys.stderr)
         # per-partition metrics from the written files (row counts come from
         # parquet footers — metadata reads only, no data scan)
         import pyarrow.parquet as _pq
@@ -195,14 +183,6 @@ class TableStore:
         with os.fdopen(fd, "w") as f:
             json.dump(manifest, f, indent=1)
         os.replace(tmp, self._manifest_path(name))
-        # post-commit: a table upgraded from the pre-versioning flat layout
-        # still has its superseded flat data dir at root/name — retire it
-        # now that the new snapshot is committed (it was untouched, and
-        # legacy readers untouched, for the whole write)
-        if prev is not None and "version" not in prev:
-            legacy = os.path.join(self.root, name)
-            if os.path.isdir(legacy):
-                shutil.rmtree(legacy)
         return path
 
     def write_once(
@@ -213,8 +193,12 @@ class TableStore:
         partition_by: list[str] | None = None,
     ) -> str:
         """Resumable write: skip if a committed manifest matches the source
-        fingerprint; otherwise (re)compute. df_factory is called lazily."""
-        lineage = {"source": source_path, "inputs": _fingerprint(source_path)} if source_path else None
+        fingerprint; otherwise (re)compute. With no `source_path` there is
+        nothing to match, so the table is always rewritten. df_factory is
+        called lazily."""
+        if not source_path:
+            return self.write(name, df_factory(), partition_by=partition_by)
+        lineage = {"source": source_path, "inputs": _fingerprint(source_path)}
         if self.exists(name, lineage):
             return self._dir(name)
         return self.write(name, df_factory(), partition_by=partition_by, lineage=lineage)
@@ -241,7 +225,7 @@ class TableStore:
         current version always survives. Returns the retired version
         numbers."""
         m = self.manifest(name)
-        if not m or "version" not in m:
+        if not m:
             return []
         snaps = m.get("snapshots", {})
         vers = sorted(int(k) for k in snaps)

@@ -13,8 +13,8 @@ Plan shape (all relational until the winners-only refine):
       → mercator foot-point refine (Arrow UDF, winners only)
 
 Skew: common names ("Hauptstraße") in dense cells are the hot keys; the join
-key is (name, cell) so hotness is bounded per cell, and hot keys are split
-explicitly into a broadcast branch (see ``skew_threshold``) — measured on
+key is (name, cell) so hotness is bounded per cell, and hot keys are salted
+explicitly inside the one join (see ``skew_threshold``) — measured on
 Spark 4.1.2, AQE's OptimizeSkewedJoin declines this plan shape.
 """
 
@@ -127,8 +127,8 @@ def match_streets(
     (name, cell, salt). K is sized PER KEY from its measured count
     (ceil(count / (threshold/8)), clamped to [2, shuffle.partitions]) so a
     barely-hot key doesn't pay the full explosion a monster key needs; the
-    key→K mapping rides as a literal map up to 256 hot keys and as a
-    broadcast-joined flag table beyond that. One addr scan, one shuffle, no duplicated addr
+    key→K mapping is a tiny broadcast-joined (name, cell, K) table on both
+    sides. One addr scan, one shuffle, no duplicated addr
     subtree, no broadcast branch — the round-2 two-branch form scanned
     the addr subtree twice and round-robined the hot rows through an
     extra shuffle, which measured ~1.85× the core-seconds of the plain
@@ -140,7 +140,6 @@ def match_streets(
     """
     a = addr.withColumn("cell", cell_of(F.col("lon"), F.col("lat")))
     s = _street_join_side(streets)
-    join_on = (a["lookup_name"] == s["street_name"]) & (a["cell"] == s["cell"])
     hot = []
     if skew_threshold:
         # one slim map-side-combined count over (name, cell); the hot set is
@@ -174,74 +173,44 @@ def match_streets(
             addr.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
         )
         target = max(1, skew_threshold // 8)
-        hot_k = {
-            (r["lookup_name"], r["cell"]): int(
-                min(n_salt, max(2, -(-r["count"] // target)))
-            )
-            for r in hot
-        }
-        sep = "\x00"  # never appears in OSM names; cell is digits
+        # key -> K rides as a tiny broadcast-joined (name, cell, _k) table:
+        # O(1) per row via the broadcast hash table, and the task binaries
+        # stay small however many keys are hot (VERDICT r4 nit 1)
+        from pyspark.sql import types as T
 
-        def _keyexpr(name_col: str):
-            return F.concat_ws(
-                sep, F.col(name_col), F.col("cell").cast("string")
-            )
-
-        if len(hot_k) <= 256:
-            # few hot keys (the realistic case): in-line literal map
-            # key -> K — no extra join, folds into the scan stage
-            k_map = F.create_map(
-                *[
-                    x
-                    for (n, c), k in hot_k.items()
-                    for x in (F.lit(f"{n}{sep}{c}"), F.lit(k))
+        hot_df = addr.sparkSession.createDataFrame(
+            [
+                (r["lookup_name"], r["cell"], min(n_salt, max(2, -(-r["count"] // target))))
+                for r in hot
+            ],
+            T.StructType(
+                [
+                    T.StructField("lookup_name", T.StringType()),
+                    T.StructField("cell", a.schema["cell"].dataType),
+                    T.StructField("_k", T.IntegerType()),
                 ]
-            )
-            a_k = k_map[_keyexpr("lookup_name")]
-            s_k = k_map[_keyexpr("street_name")]
-        else:
-            # many hot keys: a literal would cost O(|hot|) compares per row
-            # and serialize multi-MB task binaries (VERDICT r4 nit 1) —
-            # broadcast-join a tiny (key, K) DataFrame instead: O(1) per
-            # row via the broadcast hash table, same semantics.
-            from pyspark.sql import types as T
-
-            cell_type = a.schema["cell"].dataType
-            hot_df = addr.sparkSession.createDataFrame(
-                [(n, c, k) for (n, c), k in hot_k.items()],
-                T.StructType(
-                    [
-                        T.StructField("lookup_name", T.StringType()),
-                        T.StructField("cell", cell_type),
-                        T.StructField("_k", T.IntegerType()),
-                    ]
-                ),
-            )
-            a = a.join(F.broadcast(hot_df), ["lookup_name", "cell"], "left")
-            s = s.join(
-                F.broadcast(
-                    hot_df.withColumnRenamed("lookup_name", "street_name")
-                ),
-                ["street_name", "cell"],
-                "left",
-            )
-            a_k = F.col("_k")
-            s_k = F.col("_k")
+            ),
+        )
+        a = a.join(F.broadcast(hot_df), ["lookup_name", "cell"], "left")
+        s = s.join(
+            F.broadcast(hot_df.withColumnRenamed("lookup_name", "street_name")),
+            ["street_name", "cell"],
+            "left",
+        )
         # hot addr rows: deterministic per-row salt in [0, K_key); cold
         # rows: salt 0. Hot street rows: exploded across their key's K
         # salts (few rows each — a hot key means many ADDR rows per
         # street, not many streets); cold: [0]. Each hot (a, s) pair meets
         # at exactly one salt, so the join result is identical.
+        k = F.col("_k")
         a2 = a.withColumn(
             "_salt",
-            F.when(a_k.isNotNull(), F.pmod(F.hash("akey"), a_k)).otherwise(
-                F.lit(0)
-            ),
+            F.when(k.isNotNull(), F.pmod(F.hash("akey"), k)).otherwise(F.lit(0)),
         ).drop("_k")
         s2 = s.withColumn(
             "_salt",
             F.explode(
-                F.when(s_k.isNotNull(), F.sequence(F.lit(0), s_k - 1)).otherwise(
+                F.when(k.isNotNull(), F.sequence(F.lit(0), k - 1)).otherwise(
                     F.array(F.lit(0))
                 )
             ),
@@ -253,7 +222,9 @@ def match_streets(
             & (a2["_salt"] == s2["_salt"]),
         ).drop("street_name", "cell", "_salt")
     else:
-        cand = a.join(s, join_on, "inner").drop("street_name", "cell")
+        cand = a.join(
+            s, (a["lookup_name"] == s["street_name"]) & (a["cell"] == s["cell"])
+        ).drop("street_name", "cell")
     cand = _with_candidate_dist(cand)
     # strict-'<' scan order: closer wins; ties → area side (scanned first),
     # then insertion (way id) order. min_by over a total-order struct is a

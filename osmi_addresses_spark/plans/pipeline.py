@@ -2,13 +2,11 @@
 (SURVEY.md §3 query lifecycle, re-expressed as one DataFrame DAG).
 
 Pass 1 (index build) and pass 2 (layer emit) of the reference become shared
-cached DataFrames feeding multiple sinks; the two full file scans collapse
-into one parse + cache.
-
-Scale notes (100 TB): `entities`/`ways_geo` would be checkpointed to
-partitioned Parquet instead of memory-cached (io.table supports that); every
-join below keys on uniform ids except the (name, cell) candidate join, which
-is AQE-skew-protected and salted by cell construction.
+intermediates feeding multiple sinks; the two full file scans collapse into
+one parse. The two widest intermediates, `entities` and `ways_geo`, are
+checkpointed to the TableStore (io.table); the smaller shared ones are
+persisted. Every join below keys on uniform ids except the (name, cell)
+candidate join, whose hot keys are salted (operators/nearest_street).
 """
 
 from __future__ import annotations
@@ -71,7 +69,7 @@ def _persist(df: DataFrame) -> DataFrame:
 def run_all(
     spark: SparkSession,
     documents: DataFrame | None,
-    store=None,
+    store,
     source_path: str | None = None,
     entities: DataFrame | None = None,
 ) -> dict[str, DataFrame]:
@@ -81,37 +79,34 @@ def run_all(
     There is one parse path: pre-parsed ``entities`` (e.g.
     sources/osm_xml.read_osm_xml) win, else ``documents`` are parsed by
     ``parse_documents(documents, minimal=True)`` (mapInArrow on the Python
-    workers). With a TableStore, the parsed entities are checkpointed to
-    parquet partitioned by entity type: every downstream consumer gets a
+    workers). The parsed entities are checkpointed to ``store`` (a
+    TableStore) as parquet partitioned by entity type, and the assembled
+    way geometries after them: every downstream consumer gets a
     column-pruned, partition-pruned scan instead of an in-memory cache that
     AQE's concurrent stage materialization would rebuild several times.
-    This is the 100 TB configuration; the cache path is for small inputs.
+    With ``source_path`` the checkpoints are reused while that input is
+    unchanged (a re-run after a crash); without it they are always
+    rewritten.
     """
     parsed = entities if entities is not None else parse_documents(documents, minimal=True)
-    if store is not None:
-        store.write_once(
-            "entities",
-            lambda: parsed,
-            source_path=source_path,
-            partition_by=["entity"],
-        )
-        entities = store.read(spark, "entities")
-        nodes = nodes_view(entities)
-        ways = ways_view(entities)
-        # the assembly subtree (explode + join + collect_list agg) is the
-        # single most expensive shared intermediate — checkpoint it so no
-        # consumer ever recomputes it under memory pressure
-        store.write_once(
-            "ways_geo",
-            lambda: assemble_way_geometries(ways, nodes),
-            source_path=store._dir("entities"),
-        )
-        ways_geo = store.read(spark, "ways_geo")
-    else:
-        entities = _persist(parsed)
-        nodes = nodes_view(entities)
-        ways = ways_view(entities)
-        ways_geo = _persist(assemble_way_geometries(ways, nodes))
+    store.write_once(
+        "entities",
+        lambda: parsed,
+        source_path=source_path,
+        partition_by=["entity"],
+    )
+    entities = store.read(spark, "entities")
+    nodes = nodes_view(entities)
+    ways = ways_view(entities)
+    # the assembly subtree (explode + join + collect_list agg) is the
+    # single most expensive shared intermediate — checkpoint it so no
+    # consumer ever recomputes it under memory pressure
+    store.write_once(
+        "ways_geo",
+        lambda: assemble_way_geometries(ways, nodes),
+        source_path=store._dir("entities"),
+    )
+    ways_geo = store.read(spark, "ways_geo")
 
     # pass-2 eligibility: resolvable geometry + nonzero length
     # (osmi/SecondHandler.hpp:71, GeometryHelper.hpp:154-167)

@@ -156,20 +156,12 @@ def warm_driver_plans(spark: SparkSession) -> None:
     from .plans.pipeline import run_all as _run_all
     from .plans.pipeline import track_persists
 
-    def _persistent_rdd_ids(s: SparkSession) -> set:
-        try:
-            jmap = s.sparkContext._jsc.getPersistentRDDs()
-            return {e.getKey() for e in jmap.entrySet().toArray()}
-        except Exception:
-            return set()
-
     tmp = tempfile.mkdtemp(prefix="osmi_warm_")
-    rdds_before = _persistent_rdd_ids(spark)
-    try:
-        # store path: exercises the mapInArrow parse of a documents
-        # parquet, write_once committer classes, and TableStore read-back —
-        # the exact classes the timed run's first phase loads
-        with track_persists() as warm_persists:
+    with track_persists() as warm_persists:
+        try:
+            # store path: exercises the mapInArrow parse of a documents
+            # parquet, write_once committer classes, and TableStore
+            # read-back — the exact classes the timed run's first phase loads
             docs_pq = f"{tmp}/documents.parquet"
             docs.write.parquet(docs_pq)
             layers = _run_all(
@@ -180,30 +172,24 @@ def warm_driver_plans(spark: SparkSession) -> None:
             )
             layers["nodes_with_addresses"].count()
             layers["connection_line"].count()
-        for df in warm_persists:
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-    except Exception:
-        # warm-up is best-effort — the real run surfaces real errors — but a
-        # broken environment should be visible here, not minutes later.
-        logging.getLogger(__name__).warning(
-            "warm_driver_plans: warm-up failed (continuing; the timed run "
-            "will surface any real error)", exc_info=True
-        )
-    finally:
-        # Unpersist only RDDs the warm run itself materialized — a caller
-        # invoking this mid-session must not lose unrelated caches (the old
-        # clearCache() dropped every cached DataFrame in the session).
-        try:
-            jmap = spark.sparkContext._jsc.getPersistentRDDs()
-            for e in jmap.entrySet().toArray():
-                if e.getKey() not in rdds_before:
-                    e.getValue().unpersist(False)
         except Exception:
-            pass
-        shutil.rmtree(tmp, ignore_errors=True)
+            # warm-up is best-effort — the real run surfaces real errors —
+            # but a broken environment should be visible here, not minutes
+            # later.
+            logging.getLogger(__name__).warning(
+                "warm_driver_plans: warm-up failed (continuing; the timed run "
+                "will surface any real error)", exc_info=True
+            )
+        finally:
+            # release only the caches the warm run itself made, also when it
+            # failed partway — a caller invoking this mid-session keeps its
+            # unrelated caches
+            for df in warm_persists:
+                try:
+                    df.unpersist()
+                except Exception:
+                    pass
+            shutil.rmtree(tmp, ignore_errors=True)
 
 
 def warm_python_workers(spark: SparkSession, parallelism: int) -> None:

@@ -73,7 +73,7 @@ def test_sqlite_diff_catches_row_and_geometry_change(spark, small_docs, tmp_path
 
     from osmi_addresses_spark.io.spatialite import export_layer
 
-    layers = run_all(spark, small_docs)
+    layers = run_all(spark, small_docs, store=TableStore(str(tmp_path / "store")))
     for n in LAYERS:
         export_layer(layers[n], n, str(tmp_path / "xa"))
         export_layer(layers[n], n, str(tmp_path / "xb"))
@@ -117,7 +117,7 @@ def test_sqlite_diff_table_in_neither_dir(spark, small_docs, tmp_path):
     stray empty .sqlite inside the compared dir; ADVICE r4)."""
     from osmi_addresses_spark.io.spatialite import export_layer
 
-    layers = run_all(spark, small_docs)
+    layers = run_all(spark, small_docs, store=TableStore(str(tmp_path / "store")))
     export_layer(layers["entrances"], "entrances", str(tmp_path / "na"))
     export_layer(layers["entrances"], "entrances", str(tmp_path / "nb"))
 
@@ -174,7 +174,7 @@ def test_sqlite_diff_reads_sharded_export(spark, small_docs, tmp_path):
 
     from osmi_addresses_spark.io.spatialite import export_layer, export_layer_sharded
 
-    layers = run_all(spark, small_docs)
+    layers = run_all(spark, small_docs, store=TableStore(str(tmp_path / "store")))
     export_layer(layers["entrances"], "entrances", str(tmp_path / "single"))
     shard_paths = export_layer_sharded(
         layers["entrances"], "entrances", str(tmp_path / "sharded"), shards=3

@@ -5,6 +5,7 @@ test/run_tests.sh strategy but at row granularity.
 
 import pytest
 
+from osmi_addresses_spark.io.table import TableStore
 from osmi_addresses_spark.plans.pipeline import run_all
 from tests.oracle.engine import run_reference
 
@@ -74,8 +75,9 @@ def oracle_rows(rows, cols):
 
 
 @pytest.fixture(scope="module")
-def outputs(spark, small_docs):
-    return run_all(spark, small_docs)
+def outputs(spark, small_docs, tmp_path_factory):
+    store = TableStore(str(tmp_path_factory.mktemp("e2e_store")))
+    return run_all(spark, small_docs, store=store)
 
 
 @pytest.fixture(scope="module")

@@ -62,13 +62,17 @@ def test_pbf_blob_parallelism(spark, small_world, tmp_path):
 
 
 def test_pipeline_from_pbf(spark, small_world, small_docs, tmp_path):
+    from osmi_addresses_spark.io.table import TableStore
     from osmi_addresses_spark.plans.pipeline import run_all
 
     p = write_osm_pbf(
         str(tmp_path / "world.osm.pbf"), small_world.nodes, small_world.ways
     )
-    from_pbf = run_all(spark, None, entities=read_osm_pbf(spark, p))
-    from_docs = run_all(spark, small_docs)
+    from_pbf = run_all(
+        spark, None, store=TableStore(str(tmp_path / "pbf_store")),
+        entities=read_osm_pbf(spark, p),
+    )
+    from_docs = run_all(spark, small_docs, store=TableStore(str(tmp_path / "docs_store")))
     for layer in ("entrances", "ways_with_postal_code"):
         a, b = from_pbf[layer], from_docs[layer]
         assert a.count() == b.count() > 0

@@ -58,13 +58,17 @@ def test_xml_gz_and_multifile(spark, small_world, tmp_path):
 
 
 def test_pipeline_from_xml(spark, small_world, small_docs, tmp_path):
+    from osmi_addresses_spark.io.table import TableStore
     from osmi_addresses_spark.plans.pipeline import run_all
 
     p = write_osm_xml(
         str(tmp_path / "world.osm"), small_world.nodes, small_world.ways
     )
-    from_xml = run_all(spark, None, entities=read_osm_xml(spark, p))
-    from_docs = run_all(spark, small_docs)
+    from_xml = run_all(
+        spark, None, store=TableStore(str(tmp_path / "xml_store")),
+        entities=read_osm_xml(spark, p),
+    )
+    from_docs = run_all(spark, small_docs, store=TableStore(str(tmp_path / "docs_store")))
     for layer in ("entrances", "ways_with_postal_code"):
         a = from_xml[layer]
         b = from_docs[layer]

@@ -59,12 +59,14 @@ BBOX_LAYERS = [
 
 
 @pytest.fixture(scope="module")
-def testzone_layers(spark):
+def testzone_layers(spark, tmp_path_factory):
+    from osmi_addresses_spark.io.table import TableStore
     from osmi_addresses_spark.plans.pipeline import run_all
     from osmi_addresses_spark.sources.osm_xml import read_osm_xml
 
     entities = read_osm_xml(spark, TESTZONE)
-    return run_all(spark, None, entities=entities)
+    store = TableStore(str(tmp_path_factory.mktemp("testzone_store")))
+    return run_all(spark, None, store=store, entities=entities)
 
 
 @pytest.fixture(scope="module")

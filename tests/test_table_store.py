@@ -54,7 +54,7 @@ def test_write_layers_end_to_end(spark, small_docs, tmp_path):
     from osmi_addresses_spark.schemas import LAYER_NAMES
 
     store = TableStore(str(tmp_path / "wh"))
-    layers = run_all(spark, small_docs)
+    layers = run_all(spark, small_docs, store=store)
     names = list(reversed(LAYER_NAMES))
     paths = write_layers(layers, store, layer_names=names)
     assert list(paths) == names
@@ -79,7 +79,7 @@ def test_write_layers_failure_propagates_and_others_commit(spark, small_docs, tm
             return super().write(name, df, *args, **kwargs)
 
     store = FailingStore(str(tmp_path / "wh"))
-    layers = run_all(spark, small_docs)
+    layers = run_all(spark, small_docs, store=store)
     names = ["nearest_points", "entrances", "ways_with_addresses"]
     with pytest.raises(RuntimeError, match="disk full"):
         write_layers(layers, store, layer_names=names)
@@ -88,22 +88,50 @@ def test_write_layers_failure_propagates_and_others_commit(spark, small_docs, tm
         assert store.read(spark, f"layer_{name}").count() == layers[name].count()
 
 
+def _persistent_rdds(spark):
+    jmap = spark.sparkContext._jsc.getPersistentRDDs()
+    return {e.getKey() for e in jmap.entrySet().toArray()}
+
+
 def test_tracked_pipeline_leaves_no_persistent_rdd(spark, small_docs, tmp_path):
     """Every cache run_all + write_layers create goes through
     track_persists, so unpersisting the tracked list releases them all."""
     from osmi_addresses_spark.plans.pipeline import run_all, track_persists, write_layers
 
-    def persistent_rdds():
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        return {e.getKey() for e in jmap.entrySet().toArray()}
-
-    before = persistent_rdds()
+    before = _persistent_rdds(spark)
     store = TableStore(str(tmp_path / "wh"))
     with track_persists() as tracked:
         write_layers(run_all(spark, small_docs, store=store), store)
     for df in tracked:
         df.unpersist()
-    assert persistent_rdds() - before == set()
+    assert _persistent_rdds(spark) - before == set()
+
+
+def test_warm_driver_plans_leaves_no_persistent_rdd(spark):
+    """The warm-up releases every cache its pipeline run made and nothing
+    else: the session's persistent RDDs are exactly as it found them."""
+    from osmi_addresses_spark.session import warm_driver_plans
+
+    before = _persistent_rdds(spark)
+    warm_driver_plans(spark)
+    assert _persistent_rdds(spark) == before
+
+
+def test_run_all_checkpoints_follow_each_input(spark, small_docs, tmp_path):
+    """Two different inputs through one store with no source_path: the
+    second run checkpoints and reads its own entities and way geometries,
+    not the first input's committed tables."""
+    from pyspark.sql import functions as F
+
+    from osmi_addresses_spark.plans.pipeline import run_all
+
+    store = TableStore(str(tmp_path / "wh"))
+    first = run_all(spark, small_docs, store=store)
+    assert first["entities"].count() == small_docs.count()
+    nodes_only = small_docs.filter(F.col("doc_id").startswith("n"))
+    second = run_all(spark, nodes_only, store=store)
+    assert second["entities"].count() == nodes_only.count() < small_docs.count()
+    assert second["ways_geo"].count() == 0
 
 
 def test_versioned_snapshots_time_travel(spark, tmp_path):
@@ -182,46 +210,6 @@ def test_compact_preserves_rows_and_write_once_skip(spark, tmp_path):
         source_path=str(src),
     )
     assert store.manifest("t")["version"] == m2["version"]
-
-
-def test_legacy_flat_layout_upgrades_in_place(spark, tmp_path):
-    """A table committed by the pre-versioning layout (files directly under
-    root/<name>, manifest without `version`) stays readable, and the next
-    write migrates it: new snapshot dir, superseded flat files retired
-    after the commit."""
-    import json
-    import os
-    import shutil
-
-    store = TableStore(str(tmp_path / "wh"))
-    store.write("t", spark.range(9).toDF("id"))
-    # devolve to the legacy layout: move the snapshot's files to root/t,
-    # strip the version keys from the manifest
-    tdir = os.path.join(store.root, "t")
-    os.makedirs(tdir)
-    vdir = os.path.join(store._snapdir("t"), "v00001")
-    for f in os.listdir(vdir):
-        shutil.move(os.path.join(vdir, f), os.path.join(tdir, f))
-    os.rmdir(vdir)
-    mp = store._manifest_path("t")
-    with open(mp) as f:
-        m = json.load(f)
-    for k in ("version", "version_dir", "snapshots"):
-        m.pop(k)
-    with open(mp, "w") as f:
-        json.dump(m, f)
-    assert store.read(spark, "t").count() == 9  # legacy resolve
-    import pytest
-
-    with pytest.raises(KeyError):  # explicit time travel on legacy: loud
-        store.read(spark, "t", version=1)
-    store.write("t", spark.range(3).toDF("id"))
-    assert store.read(spark, "t").count() == 3
-    assert store.versions("t") == [1]
-    # the superseded flat dir is retired post-commit; snapshots are
-    # siblings, so the legacy dir was never mixed with version dirs
-    assert not os.path.exists(tdir)
-    assert os.path.isdir(os.path.join(store._snapdir("t"), "v00001"))
 
 
 def test_vacuum_sweeps_orphan_version_dirs(spark, tmp_path):
