@@ -359,7 +359,7 @@ def q_groupby_rollup(spark, sf_dir):
 
 SQL_GROUPBY_ROLLUP = """
 SELECT o_orderpriority, o_orderstatus, COUNT(*) AS n,
-       SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS total_cents
+       CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS total_cents
 FROM orders GROUP BY ROLLUP(o_orderpriority, o_orderstatus)
 """
 
@@ -1530,7 +1530,7 @@ FROM documents
 
 def m_media_refs(spark, sf_dir):
     """Multimodal plumbing: per document, the media spans carried losslessly
-    through parsing (decode itself is stubbed — see operators/media.py)."""
+    through parsing (decode is synthetic — see operators/media.py)."""
     e = parse_documents(_docs(spark, sf_dir))
     media = F.filter(F.col("noise"), lambda s: s["kind"] == "media")
     return (
@@ -1561,8 +1561,8 @@ def m_phash_dedup(spark, sf_dir):
     """Perceptual-hash dedup over decoded media: per phash group, how many
     span occurrences / distinct refs it covers and which ref is kept. The
     decode is the deterministic synthetic codec (operators/media.py) — md5
-    chain → 64-pixel buffer → average-hash — computed JVM-side on the hot
-    path and cross-checked against the Arrow decode path in tests."""
+    chain → 64-pixel buffer → average-hash — computed JVM-side as Column
+    expressions and checked against the DuckDB oracle."""
     from .operators.media import media_phash_col, media_spans
 
     spans = media_spans(parse_documents(_docs(spark, sf_dir)))
@@ -1618,11 +1618,8 @@ def m_media_resize(spark, sf_dir):
     """Parameterized media resize (brief: decode / feature-extract /
     resize / frame-sample): the synthetic 8×8 buffer of every media_ref
     box-filtered to 4×4 with integer floor-mean semantics, emitted as a
-    32-char hex string. This query runs the pure Column-expression mirror
-    (whole-stage codegen, no UDF); the Arrow/numpy batch path
-    (operators/media.resize_buffers — one reshape-sum per batch) is proven
-    bit-identical in tests/test_streaming_media_dedup.py. A real decoder
-    feeds the same resize via operators/codecs.file_codec."""
+    32-char hex string. The resize is a pure Column expression
+    (operators/media.media_resize_col; whole-stage codegen, no UDF)."""
     from .operators.media import media_resize_col, media_spans
 
     refs = media_spans(parse_documents(_docs(spark, sf_dir))).select("media_ref").distinct()
@@ -1663,10 +1660,8 @@ def m_frame_sample(spark, sf_dir):
     "video" of 1..8 frames (count from the first md5 byte of the ref);
     every 2nd frame is sampled and perceptual-hashed, all as Column
     expressions — the per-frame seed feeds the same md5-chain codec as
-    media_phash_col, and a real decoder plugs in behind
-    operators/codecs.file_codec exactly as for stills. Scale shape: the
-    explode factor is the bounded frame count, and everything stays in
-    whole-stage codegen."""
+    media_phash_col. Scale shape: the explode factor is the bounded frame
+    count, and everything stays in whole-stage codegen."""
     from .operators.media import media_phash_col, media_spans
 
     refs = media_spans(parse_documents(_docs(spark, sf_dir))).select("media_ref").distinct()
@@ -4001,9 +3996,9 @@ WITH first AS (
   SELECT event_type, day, COUNT(*) AS new_users FROM first GROUP BY 1, 2
 )
 SELECT event_type, day, new_users,
-       SUM(new_users) OVER (
+       CAST(SUM(new_users) OVER (
          PARTITION BY event_type ORDER BY day
-         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_users
+         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_users
 FROM daily
 """
 

@@ -254,22 +254,3 @@ def value_along(lons: np.ndarray, lats: np.ndarray, dist: float) -> tuple[float,
     lo, la = value_along_multi(lons, lats, np.array([dist], dtype=np.float64))
     return float(lo[0]), float(la[0])
 
-
-# ------------------------------------------------------------ point-in-poly
-def points_in_ring(
-    lons: np.ndarray, lats: np.ndarray, ring_lon: np.ndarray, ring_lat: np.ndarray
-) -> np.ndarray:
-    """Vectorized ray-casting PIP (north-rule polygon assignment)."""
-    if ring_lon[0] != ring_lon[-1] or ring_lat[0] != ring_lat[-1]:
-        ring_lon = np.append(ring_lon, ring_lon[0])
-        ring_lat = np.append(ring_lat, ring_lat[0])
-    x0, y0 = ring_lon[:-1], ring_lat[:-1]
-    x1, y1 = ring_lon[1:], ring_lat[1:]
-    inside = np.zeros(len(lons), dtype=bool)
-    for i in range(len(x0)):
-        cond = (y0[i] > lats) != (y1[i] > lats)
-        if not cond.any():
-            continue
-        xint = (x1[i] - x0[i]) * (lats - y0[i]) / (y1[i] - y0[i]) + x0[i]
-        inside ^= cond & (lons < xint)
-    return inside

@@ -64,23 +64,6 @@ def is_point_near_bbox(
 
 
 # ------------------------------------------------------------- distances
-def min_vertex_dist(coords: Column, plon: Column, plat: Column) -> Column:
-    """Min euclidean degree-space distance from point to way vertices
-    (osmi/ConnectionLinePreprocessor.hpp:266-267) — F.aggregate, JVM-side.
-
-    Computed as sqrt(min(squared)) — identical ordering to the reference's
-    per-vertex sqrt (sqrt is monotone).
-    """
-    min_sq = F.aggregate(
-        coords,
-        F.lit(BIG),
-        lambda acc, c: F.least(
-            acc, (c["lon"] - plon) * (c["lon"] - plon) + (c["lat"] - plat) * (c["lat"] - plat)
-        ),
-    )
-    return F.sqrt(min_sq)
-
-
 def min_segment_dist(coords: Column, plon: Column, plat: Column) -> Column:
     """GEOS point-to-linestring distance in degree space — what the
     reference's closest-way scan actually computes: OGRLineString::Distance

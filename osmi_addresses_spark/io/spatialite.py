@@ -471,19 +471,3 @@ def _merge_local_shards(shard_paths: list[str], name: str, out_dir: str) -> str:
         con.close()
     return path
 
-
-def export_layers_sharded(
-    layers: dict[str, DataFrame],
-    out_dir: str,
-    shards: int | None = None,
-    merge: bool = False,
-) -> dict[str, list[str]]:
-    """Sharded export of all 11 layers; with merge=True also produces the
-    single-file contract next to each shard directory."""
-    out = {}
-    for name in LAYER_FIELDS:
-        paths = export_layer_sharded(layers[name], name, out_dir, shards=shards)
-        if merge:
-            merge_sqlite_shards(paths, name, out_dir)
-        out[name] = paths
-    return out

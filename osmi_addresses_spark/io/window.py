@@ -76,75 +76,6 @@ def read_layer_bbox(
     return out.drop("_bbox_w", "_bbox_e", "_bbox_s", "_bbox_n")
 
 
-def read_layer_windows(
-    spark: SparkSession,
-    store,
-    layer: str,
-    bboxes: list[tuple[float, float, float, float]],
-) -> DataFrame:
-    """Multi-window read in ONE scan (VERDICT r4 item 6): the reference's
-    viewer issues many map windows per tile set; issuing them as one
-    OR-of-ranges predicate keeps a single pass over the table and still
-    prunes row groups (parquet min/max stats apply per disjunct — a row
-    group outside EVERY window is skipped).
-
-    Result semantics: set union of the single-window reads (a row inside
-    two windows appears once — OGR's spatial-filter semantics, not a
-    concatenation)."""
-    if not bboxes:
-        raise ValueError("read_layer_windows: need at least one bbox")
-    df = store.read(spark, f"layer_{layer}")
-    pred = None
-    for bbox in bboxes:
-        p = bbox_filter(df, bbox)
-        pred = p if pred is None else (pred | p)
-    return df.filter(pred).drop("_bbox_w", "_bbox_e", "_bbox_s", "_bbox_n")
-
-
-def read_layer_polygon(
-    spark: SparkSession,
-    store,
-    layer: str,
-    ring: list[tuple[float, float]],
-) -> DataFrame:
-    """Polygon window over a POINT layer: bbox prefilter (pushed into the
-    parquet scan, exactly like read_layer_bbox) + exact even-odd ray-cast
-    post-filter on the surviving rows (operators.pip.pip_expr — JVM Column
-    expression, no Python in the path). ``ring`` is a closed CRS84 ring
-    [(lon, lat), ...] (first == last; closed automatically otherwise).
-
-    Line/polygon layers raise: an exact linestring-polygon intersection is
-    GEOS territory in the reference (OGR SetSpatialFilter) — returning the
-    bbox candidate set silently would change selection semantics. Use
-    read_layer_bbox for the candidate pass instead."""
-    from ..operators.pip import pip_expr
-
-    if len(ring) < 3:
-        raise ValueError("read_layer_polygon: ring needs >= 3 vertices")
-    if ring[0] != ring[-1]:
-        ring = list(ring) + [ring[0]]
-    df = store.read(spark, f"layer_{layer}")
-    if not isinstance(df.schema["geom"].dataType, T.StructType):
-        raise NotImplementedError(
-            "read_layer_polygon supports POINT layers; for LINESTRING "
-            "layers use read_layer_bbox on the polygon's bbox (candidate "
-            "semantics) and refine exactly downstream"
-        )
-    lons = [p[0] for p in ring]
-    lats = [p[1] for p in ring]
-    bbox = (min(lons), min(lats), max(lons), max(lats))
-    ring_col = F.array(
-        *[
-            F.struct(F.lit(x).alias("lon"), F.lit(y).alias("lat"))
-            for x, y in ring
-        ]
-    )
-    out = df.filter(bbox_filter(df, bbox)).filter(
-        pip_expr(ring_col, F.col("geom.lon"), F.col("geom.lat"))
-    )
-    return out.drop("_bbox_w", "_bbox_e", "_bbox_s", "_bbox_n")
-
-
 def read_layer_tile(
     spark: SparkSession, store, layer: str, zoom: int, x: int, y: int
 ) -> DataFrame:

@@ -1,54 +1,20 @@
 """Multimodal columns: media spans as opaque references with typed metadata.
 
-Real-codec decode is out of scope for this container (no image/audio libs):
-`decode_media` raises NotImplementedError unless `fake=True`. Everything
-else is real and tested end-to-end against a DETERMINISTIC SYNTHETIC CODEC
-(md5-chain pixel buffers): binary buffer decode over Arrow batches
-(`decode_media_buffers`), perceptual average-hash (`media_phash_col`, also
-available JVM-side as pure Column expressions), and oracle-checked phash
-dedup (driver query `media_phash_dedup`). Swapping in a real decoder only
-changes `_fake_pixels` / `_fake_features` — and `operators/codecs.py`
-ships a WORKED real adapter (pure-python PPM/PGM/BMP decode → integer luma
-→ 8×8 pool; `file_codec(root)`) that satisfies the same contract with no
-image libraries, tested end-to-end through `decode_media_buffers`.
+No image or audio codec is available, so a media_ref "decodes" to a
+deterministic synthetic buffer: the md5 chain of the ref, 64 grayscale
+pixels. The decode, the perceptual average-hash (`media_phash_col`) and the
+box-filter resize (`media_resize_col`) are pure Column expressions built on
+one shared decode (`_pixels_col`), so they run JVM-side and the DuckDB
+oracle reproduces them bit for bit (driver queries `media_phash_dedup`,
+`media_resize`, `frame_sample`).
 """
 
 from __future__ import annotations
 
-import hashlib
-from collections.abc import Iterator
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-FEATURE_DIM = 8
-
-MEDIA_FEATURE_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType()),
-        T.StructField("media_ref", T.StringType()),
-        T.StructField("caption", T.StringType()),
-        T.StructField("features", T.ArrayType(T.FloatType())),
-    ]
-)
-
-
-def _fake_features(ref: str) -> np.ndarray:
-    """Deterministic stand-in for a real decoder: md5(ref) → 8 floats."""
-    h = hashlib.md5(ref.encode()).digest()
-    return (np.frombuffer(h[:FEATURE_DIM], dtype=np.uint8).astype(np.float32) / 255.0)
-
-
-def decode_media(ref: str, payload: bytes | None = None, fake: bool = False) -> np.ndarray:
-    if fake:
-        return _fake_features(ref)
-    raise NotImplementedError(
-        "real media decode requires image/audio libs not present in this "
-        "container; run with fake=True for the deterministic stand-in"
-    )
+PIXELS = 64
 
 
 def media_spans(entities: DataFrame) -> DataFrame:
@@ -65,132 +31,11 @@ def media_spans(entities: DataFrame) -> DataFrame:
     )
 
 
-# ---- synthetic codec + perceptual hash -----------------------------------
-# The "image" a media_ref decodes to is a deterministic 64-byte pixel
-# buffer: the md5 chain of the ref (4 × 16 bytes). It stands in for a real
-# codec (none in this container) but gives every downstream component —
-# binary buffer column, perceptual hashing, phash dedup — real data with a
-# cross-engine-reproducible definition, so the dedup is oracle-checked
-# instead of stubbed.
-
-PIXELS = 64
-
-
-def _fake_pixels(ref: str) -> bytes:
-    h, out = ref.encode(), b""
-    for _ in range(PIXELS // 16):
-        hx = hashlib.md5(h).hexdigest()
-        out += bytes.fromhex(hx)
-        h = hx.encode()  # chain over the hex string (mirrors the SQL md5)
-    return out
-
-
-# ---- codec adapter seam ---------------------------------------------------
-# A codec is `fn(media_ref: str) -> bytes` returning exactly PIXELS bytes
-# (grayscale pixel buffer). Swapping in a real decoder off-sandbox is a
-# one-function change: `decode_media_buffers(spans, codec=my_decoder)`.
-# The function must be serializable (it ships to executors inside the
-# Arrow UDF closure) and is validated per buffer — a codec returning the
-# wrong length fails the task loudly instead of corrupting the phash.
-Codec = "Callable[[str], bytes]"
-
-
-def synthetic_codec(ref: str) -> bytes:
-    """Default codec: the md5-chain stand-in (cross-engine reproducible,
-    mirrored bit-for-bit by the DuckDB oracle and media_phash_col)."""
-    return _fake_pixels(ref)
-
-
-def decode_media_buffers(
-    spans: DataFrame, ref_col: str = "media_ref", codec=None
-) -> DataFrame:
-    """The decode step as real plumbing: distinct refs → (media_ref,
-    pixels binary). Arrow-batched mapInPandas; ``codec`` is the adapter
-    seam (defaults to the synthetic md5-chain codec — a real decoder is
-    per-buffer work with the identical signature and batch shape)."""
-    codec = codec or synthetic_codec
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            bufs = []
-            for r in pdf[ref_col]:
-                b = codec(r)
-                if not isinstance(b, bytes) or len(b) != PIXELS:
-                    raise ValueError(
-                        f"codec contract violation for {r!r}: expected "
-                        f"{PIXELS} bytes, got {type(b).__name__}"
-                        f"[{len(b) if isinstance(b, bytes) else '?'}]"
-                    )
-                bufs.append(b)
-            yield pd.DataFrame({"media_ref": pdf[ref_col], "pixels": bufs})
-
-    return spans.select(ref_col).distinct().mapInPandas(
-        gen,
-        schema=T.StructType(
-            [
-                T.StructField("media_ref", T.StringType()),
-                T.StructField("pixels", T.BinaryType()),
-            ]
-        ),
-    )
-
-
-def resize_buffers(
-    decoded: DataFrame,
-    src: tuple[int, int] = (8, 8),
-    dst: tuple[int, int] = (4, 4),
-    pixels_col: str = "pixels",
-) -> DataFrame:
-    """Parameterized box-filter resize over decoded buffers (brief:
-    decode / feature-extract / RESIZE / frame-sample): (media_ref, pixels)
-    → (media_ref, resized binary, W'×H'). Arrow-batched mapInPandas; the
-    whole batch resizes as ONE numpy reshape-sum (no per-pixel Python).
-    Integer-exact semantics — each output pixel is the floor-mean of its
-    kh×kw source box — so the JVM Column mirror (`media_resize_col`) and
-    the DuckDB oracle reproduce it bit-for-bit. Requires integer scale
-    factors (kh = H/H', kw = W/W')."""
-    (sw, sh), (dw, dh) = src, dst
-    if sw % dw or sh % dh:
-        raise ValueError(f"non-integer scale: {src} -> {dst}")
-    kh, kw = sh // dh, sw // dw
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            mat = np.frombuffer(
-                b"".join(pdf[pixels_col]), dtype=np.uint8
-            ).reshape(len(pdf), sh, sw)
-            out = (
-                mat.reshape(len(pdf), dh, kh, dw, kw)
-                .sum(axis=(2, 4), dtype=np.int64)
-                // (kh * kw)
-            ).astype(np.uint8)
-            yield pd.DataFrame(
-                {
-                    "media_ref": pdf["media_ref"],
-                    "resized": [r.tobytes() for r in out],
-                }
-            )
-
-    return decoded.mapInPandas(
-        gen,
-        schema=T.StructType(
-            [
-                T.StructField("media_ref", T.StringType()),
-                T.StructField("resized", T.BinaryType()),
-            ]
-        ),
-    )
-
-
 def _pixels_col(ref_col) -> "F.Column":
     """The synthetic-codec decode as a Column expression: md5-chain hex →
-    array of PIXELS ints. THE single JVM-side definition of the codec —
-    media_phash_col and media_resize_col both build on it, so the chain
-    (and PIXELS) can never drift between the two mirrors."""
+    array of PIXELS ints (each md5 hashes the previous hex digest). The one
+    definition of the codec: media_phash_col and media_resize_col both
+    build on it, so the chain (and PIXELS) cannot drift between them."""
     h = F.md5(F.encode(ref_col, "utf-8"))
     hexbuf = h
     for _ in range(PIXELS // 16 - 1):
@@ -206,8 +51,7 @@ def media_resize_col(ref_col, dst: int = 4) -> "F.Column":
     """The synthetic-codec decode + box-filter resize as a pure Column
     expression: the 8×8 md5-chain buffer downsampled to dst×dst by
     integer floor-mean, returned as a 2·dst² hex string (engine-agnostic).
-    Bit-identical to resize_buffers over decode_media_buffers and to the
-    DuckDB oracle."""
+    Bit-identical to the DuckDB oracle."""
     side = 8
     if side % dst:
         raise ValueError(f"non-integer scale: 8 -> {dst}")
@@ -246,18 +90,11 @@ def media_resize_col(ref_col, dst: int = 4) -> "F.Column":
     )
 
 
-def phash_from_pixels(pixels: bytes) -> str:
-    """Average-hash of a decoded buffer: bit j = pixel j > mean. Returned as
-    a 64-char '0'/'1' string (engine-agnostic, no sign-bit gymnastics)."""
-    mean_x64 = sum(pixels)  # compare p*64 > total — integer-exact
-    return "".join("1" if p * PIXELS > mean_x64 else "0" for p in pixels)
-
-
 def media_phash_col(ref_col) -> "F.Column":
-    """The same decode + average-hash as a pure Column expression (JVM md5
-    chain via the shared _pixels_col), used on the query hot path —
-    bit-identical to phash_from_pixels(_fake_pixels(ref)) and to the
-    DuckDB oracle."""
+    """The decode + average-hash as a pure Column expression (JVM md5 chain
+    via the shared _pixels_col): bit j = pixel j > mean, compared as
+    p·PIXELS > total so it stays integer-exact. Returned as a 64-char
+    '0'/'1' string; bit-identical to the DuckDB oracle."""
     pixels = _pixels_col(ref_col)
     total = F.aggregate(pixels, F.lit(0), lambda acc, x: acc + x)
     return F.array_join(
@@ -266,25 +103,3 @@ def media_phash_col(ref_col) -> "F.Column":
         ),
         "",
     )
-
-
-def extract_media_features(entities: DataFrame) -> DataFrame:
-    """Arrow-batched feature extraction over media spans (mapInPandas).
-
-    One batch in → one batch out; per-batch numpy work, no per-row Python in
-    the Spark plan. Partitioning/batching is identical to what a real
-    decoder would use.
-    """
-    spans = media_spans(entities)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            feats = [
-                _fake_features(r).tolist() for r in pdf["media_ref"].tolist()
-            ]
-            pdf = pdf.assign(features=feats)
-            yield pdf[["doc_id", "media_ref", "caption", "features"]]
-
-    return spans.mapInPandas(gen, schema=MEDIA_FEATURE_SCHEMA)

@@ -24,7 +24,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import MAXDIST
@@ -85,10 +85,11 @@ def street_candidates(addr: DataFrame, streets: DataFrame) -> DataFrame:
     """The flagship's candidate stage as a standalone operator: plain
     (name, cell) equi-join + bbox±tol prefilter + segment distance, one row
     per surviving (addr, way) candidate with `dist`. This is the shared
-    front half for general-k consumers (e.g. the top-k street kNN query);
-    match_streets layers hot-key salting over the same building blocks and
-    folds the k=1 argmin. ``addr`` needs (lookup_name, lon, lat, ...);
-    output = addr cols + way_id, is_area, way_lastchange, dist.
+    front half for general-k consumers (e.g. the top-k street kNN query)
+    and for match_streets when no key is hot; with hot keys match_streets
+    salts the join over the same building blocks. ``addr`` needs
+    (lookup_name, lon, lat, ...); output = addr cols + way_id, is_area,
+    way_lastchange, dist.
     """
     a = addr.withColumn("cell", cell_of(F.col("lon"), F.col("lat")))
     s = _street_join_side(streets)
@@ -215,17 +216,16 @@ def match_streets(
                 )
             ),
         ).drop("_k")
-        cand = a2.join(
-            s2,
-            (a2["lookup_name"] == s2["street_name"])
-            & (a2["cell"] == s2["cell"])
-            & (a2["_salt"] == s2["_salt"]),
-        ).drop("street_name", "cell", "_salt")
+        cand = _with_candidate_dist(
+            a2.join(
+                s2,
+                (a2["lookup_name"] == s2["street_name"])
+                & (a2["cell"] == s2["cell"])
+                & (a2["_salt"] == s2["_salt"]),
+            ).drop("street_name", "cell", "_salt")
+        )
     else:
-        cand = a.join(
-            s, (a["lookup_name"] == s["street_name"]) & (a["cell"] == s["cell"])
-        ).drop("street_name", "cell")
-    cand = _with_candidate_dist(cand)
+        cand = street_candidates(addr, streets)
     # strict-'<' scan order: closer wins; ties → area side (scanned first),
     # then insertion (way id) order. min_by over a total-order struct is a
     # hash aggregate (partial+final, map-side combine, no sort) — same

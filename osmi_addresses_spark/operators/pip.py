@@ -3,13 +3,8 @@ polygons; S2-style cell covering + ray casting).
 
 Candidate generation is the same grid-covering equi-join as the street match
 (functions/cells.py — our S2/H3 stand-in); the exact test is even-odd ray
-casting. Two implementations:
-
-- `pip_expr`: pure Column expression (zip_with over ring edges + crossing
-  parity) — JVM-side, whole-stage codegen; the default.
-- `pip_pandas_udf`: vectorized numpy ray casting (functions/geom_np.
-  points_in_ring) behind an Arrow batch UDF — the shape the north star
-  names; used for cross-checking and as the template for heavier geometry.
+casting in `pip_expr`, a pure Column expression (zip_with over the ring
+edges, then crossing parity) that runs JVM-side in whole-stage codegen.
 """
 
 from __future__ import annotations
@@ -62,22 +57,3 @@ def assign_points_to_polygons(
     cand = pts.join(polys, "cell").drop("cell")
     return cand.filter(pip_expr(F.col("ring"), F.col(plon), F.col(plat))).drop("ring")
 
-
-def pip_pandas_udf():
-    """Arrow-batched numpy ray casting: (ring, lon, lat) → bool."""
-    import pandas as pd
-
-    from ..functions.geom_np import points_in_ring
-
-    @F.pandas_udf("boolean")
-    def _pip(ring: pd.Series, lon: pd.Series, lat: pd.Series) -> pd.Series:
-        import numpy as np
-
-        out = []
-        for r, lo, la in zip(ring, lon, lat):
-            rl = np.array([p["lon"] for p in r])
-            rt = np.array([p["lat"] for p in r])
-            out.append(bool(points_in_ring(np.array([lo]), np.array([la]), rl, rt)[0]))
-        return pd.Series(out)
-
-    return _pip

@@ -78,26 +78,11 @@ def hll_distinct(
     return hll_estimate_from_registers(regs, group_cols, p, alias)
 
 
-def hll_merge(parts: list[DataFrame], group_cols: list[str]) -> DataFrame:
-    """Merge per-partition/per-source register sets: element-wise max.
-    Exactly the mergeability law that lets HLL state combine across
-    executors, days, or streams without revisiting raw data:
-    merge(regs(A), regs(B)) == regs(A ∪ B) register-for-register.
-    Feed the result to the same estimator as hll_distinct
-    (hll_estimate_from_registers)."""
-    if not parts:
-        raise ValueError("hll_merge needs at least one register set")
-    merged = parts[0]
-    for p in parts[1:]:
-        merged = merged.unionByName(p)
-    return merged.groupBy(*group_cols, "bucket").agg(F.max("reg").alias("reg"))
-
-
 def hll_estimate_from_registers(
     regs: DataFrame, group_cols: list[str], p: int = 8, alias: str = "hll_est"
 ) -> DataFrame:
-    """The hll_distinct estimator applied to an existing (possibly merged)
-    register DataFrame."""
+    """The hll_distinct estimator applied to an existing register
+    DataFrame (group cols, bucket, reg)."""
     m = 1 << p
     alpha = 0.7213 / (1 + 1.079 / m)
     agg = regs.groupBy(*group_cols).agg(
@@ -178,19 +163,6 @@ def cms_counters(
         )
         rows = part if rows is None else rows.unionByName(part)
     return rows.groupBy("row", "col").agg(F.count(F.lit(1)).alias("cnt"))
-
-
-def cms_merge(parts: list[DataFrame]) -> DataFrame:
-    """Merge count-min sketches: element-wise counter addition — the CMS
-    mergeability law (merge(cms(A), cms(B)) == cms(A ⊎ B) counter-for-
-    counter, A ⊎ B the multiset union), which is what lets per-partition /
-    per-day sketches combine without re-reading the stream."""
-    if not parts:
-        raise ValueError("cms_merge needs at least one sketch")
-    merged = parts[0]
-    for p in parts[1:]:
-        merged = merged.unionByName(p)
-    return merged.groupBy("row", "col").agg(F.sum("cnt").alias("cnt"))
 
 
 def cms_estimate(

@@ -8,7 +8,8 @@ Parallelism model mirrors libosmium's blob-parallel decode, Spark-first:
 
 1. a cheap driver-side scan reads only the 4-byte BlobHeader lengths and
    seeks blob-to-blob (touches ~32 bytes per ~8 MB blob) to build a
-   (path, offset, size) blob index;
+   (path, offset, size) blob index, rejecting framing that overruns the
+   file;
 2. the index parallelizes: one task per blob, each decoding its byte range
    independently (`mapInPandas`) into the same minimal entity rows the
    span parser produces. A planet.pbf (~1500 blobs) therefore decodes with
@@ -166,23 +167,44 @@ def _open_ranged(path: str):
 
 def scan_blobs(path: str) -> list[tuple[str, int, int, str]]:
     """→ [(path, offset, size, type)] touching only headers (fileformat.proto:
-    int32 header_len | BlobHeader{type=1, datasize=3} | blob bytes)."""
+    int32 header_len | BlobHeader{type=1, datasize=3} | blob bytes).
+
+    The framing is checked against the file size, so a truncated or corrupt
+    file raises ValueError (naming the path and offset) on the driver,
+    before any decode task runs: 1-3 trailing bytes, a BlobHeader length
+    <= 0 or past EOF, or a blob whose declared datasize runs past EOF."""
     out = []
     with _open_ranged(path) as f:
-        while True:
-            raw = f.read(4)
-            if len(raw) < 4:
-                break
-            (hlen,) = struct.unpack(">i", raw)
+        n = f.seek(0, 2)
+        i = f.seek(0)
+        while i < n:
+            if i + 4 > n:
+                raise ValueError(
+                    f"{path}: truncated .osm.pbf — {n - i} trailing byte(s) "
+                    f"where a 4-byte BlobHeader length was expected at offset {i}"
+                )
+            (hlen,) = struct.unpack(">i", f.read(4))
+            i += 4
+            if hlen <= 0 or i + hlen > n:
+                raise ValueError(
+                    f"{path}: corrupt/truncated .osm.pbf — BlobHeader length "
+                    f"{hlen} at offset {i - 4} exceeds file of {n} bytes"
+                )
             header = f.read(hlen)
+            i += hlen
             btype, datasize = "", 0
             for fno, _wt, v in _fields(header):
                 if fno == 1:
                     btype = v.decode()
                 elif fno == 3:
                     datasize = v
-            out.append((path, f.tell(), datasize, btype))
-            f.seek(datasize, 1)
+            if i + datasize > n:
+                raise ValueError(
+                    f"{path}: truncated .osm.pbf — blob '{btype}' declares "
+                    f"{datasize} bytes at offset {i} but only {n - i} remain"
+                )
+            out.append((path, i, datasize, btype))
+            i = f.seek(i + datasize)
     return out
 
 
@@ -318,72 +340,17 @@ def _decode_primitive_block(data: bytes) -> list[dict]:
 
 # ------------------------------------------------------------------ reader
 
-def _check_header_data(data: bytes, origin: str) -> None:
+def _check_header(path: str, offset: int, size: int) -> None:
+    """Decode an OSMHeader blob and reject unknown required_features
+    (HeaderBlock field 4) — the osmformat contract for readers."""
+    data = _blob_bytes(path, offset, size)
     required = [v.decode() for f, _w, v in _fields(data) if f == 4]
     unknown = [f for f in required if f not in SUPPORTED_FEATURES]
     if unknown:
         raise ValueError(
-            f"{origin}: header requires unsupported features {unknown} "
+            f"{path}: header requires unsupported features {unknown} "
             f"(supported: {sorted(SUPPORTED_FEATURES)})"
         )
-
-
-def _check_header(path: str, offset: int, size: int) -> None:
-    """Decode an OSMHeader blob and reject unknown required_features
-    (HeaderBlock field 4) — the osmformat contract for readers."""
-    _check_header_data(_blob_bytes(path, offset, size), path)
-
-
-def decode_pbf_buffer(buf: bytes, origin: str = "<buffer>") -> list[dict]:
-    """Decode one whole .osm.pbf file held in memory → entity row dicts.
-    Used by the streaming ingest path (binaryFile stream hands each new
-    file's content as bytes); same decode kernels as the blob-parallel
-    batch reader, including the OSMHeader required_features check.
-
-    Truncated or corrupt buffers raise ValueError (naming `origin`) rather
-    than silently decoding only the complete leading blobs — a partial file
-    must fail the batch so the streaming checkpoint retries it instead of
-    committing partial rows. Producers dropping files into a streamed
-    directory must therefore write-then-atomic-rename (write to a temp name
-    outside the glob, `os.rename` into place): binaryFile snapshots are not
-    synchronized with writers, and a mid-write pickup is indistinguishable
-    from a genuinely corrupt file."""
-    rows: list[dict] = []
-    i = 0
-    n = len(buf)
-    while i < n:
-        if i + 4 > n:
-            raise ValueError(
-                f"{origin}: truncated .osm.pbf — {n - i} trailing byte(s) "
-                f"where a 4-byte BlobHeader length was expected at offset {i}"
-            )
-        (hlen,) = struct.unpack(">i", buf[i : i + 4])
-        i += 4
-        if hlen <= 0 or i + hlen > n:
-            raise ValueError(
-                f"{origin}: corrupt/truncated .osm.pbf — BlobHeader length "
-                f"{hlen} at offset {i - 4} exceeds buffer of {n} bytes"
-            )
-        header = buf[i : i + hlen]
-        i += hlen
-        btype, datasize = "", 0
-        for fno, _wt, v in _fields(header):
-            if fno == 1:
-                btype = v.decode()
-            elif fno == 3:
-                datasize = v
-        if datasize < 0 or i + datasize > n:
-            raise ValueError(
-                f"{origin}: truncated .osm.pbf — blob '{btype}' declares "
-                f"{datasize} bytes at offset {i} but only {n - i} remain"
-            )
-        blob = buf[i : i + datasize]
-        i += datasize
-        if btype == "OSMHeader":
-            _check_header_data(_blob_payload(blob), origin)
-        elif btype == "OSMData":
-            rows.extend(_decode_primitive_block(_blob_payload(blob)))
-    return rows
 
 
 def read_osm_pbf(spark: SparkSession, path: str) -> DataFrame:

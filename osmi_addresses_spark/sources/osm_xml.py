@@ -1,7 +1,7 @@
 """Native OSM XML ingestion — the reference's file-format front door
 (`/root/reference/osmi/main.cpp:73` via `osmium/io/any_input.hpp` accepts
-.osm XML and .pbf). PBF needs a protobuf runtime this container doesn't
-ship; XML is covered here end-to-end:
+.osm XML and .pbf). `sources/osm_pbf.py` reads .pbf; this module reads
+XML:
 
 - `read_osm_xml(spark, path)`: binaryFile scan → per-file iterparse in
   executors → the same minimal entities schema the span parser produces,
@@ -85,9 +85,11 @@ def _entities_from_xml(path: str, content: bytes) -> Iterator[dict]:
             elem.clear()
 
 
-def xml_entities_df(files: DataFrame) -> DataFrame:
-    """(path, content) binaryFile rows — batch OR streaming — → entities
-    with the minimal schema. Shared by read_osm_xml and streaming.stream_osm."""
+def read_osm_xml(spark: SparkSession, path: str) -> DataFrame:
+    """path (file / dir / glob of .osm[.gz|.bz2]) → entities DataFrame with
+    the minimal entity schema (entity, osm_id, lat, lon, lastchange, tags,
+    refs) — drop-in ahead of nodes_view/ways_view."""
+    files = spark.read.format("binaryFile").load(path).select("path", "content")
     cols = [f.name for f in ENTITY_MIN_SCHEMA.fields]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -98,14 +100,6 @@ def xml_entities_df(files: DataFrame) -> DataFrame:
                     yield pd.DataFrame(rows, columns=cols)
 
     return files.mapInPandas(gen, schema=ENTITY_MIN_SCHEMA)
-
-
-def read_osm_xml(spark: SparkSession, path: str) -> DataFrame:
-    """path (file / dir / glob of .osm[.gz|.bz2]) → entities DataFrame with
-    the minimal entity schema (entity, osm_id, lat, lon, lastchange, tags,
-    refs) — drop-in ahead of nodes_view/ways_view."""
-    files = spark.read.format("binaryFile").load(path).select("path", "content")
-    return xml_entities_df(files)
 
 
 def write_osm_xml(path: str, nodes, ways) -> str:

@@ -1,53 +1,15 @@
-"""Structured Streaming ingest (SURVEY.md §2.7).
+"""Structured Streaming over event streams (SURVEY.md §2.7).
 
-The reference is a batch tool; the streaming surface here is the engine's
-incremental-ingest path for the same documents table:
-
-- `stream_documents`: file-source stream of documents parquet → the same
-  explode-free Arrow parser → an entities stream (append mode). New document
-  files landing in the directory become parsed entities incrementally.
-- `windowed_event_counts`: watermarked tumbling-window aggregation over an
-  event stream (late data dropped past the watermark) — the streaming mirror
-  of driver_queries.q_event_window_agg.
-
-Both run with Trigger.AvailableNow in tests (bounded, deterministic).
+The reference is a batch tool; the streaming surface here is
+`stream_interval_join`, a watermarked stream-stream interval join whose
+join state Spark expires by event time (the driver gate drains it in one
+AvailableNow batch).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..schemas import DOCUMENTS_SCHEMA
-from ..sources.parser import parse_documents
-
-
-def stream_documents(spark: SparkSession, path: str) -> DataFrame:
-    """Streaming documents(doc_id, spans) → streaming entities."""
-    docs = spark.readStream.schema(DOCUMENTS_SCHEMA).parquet(path)
-    return parse_documents(docs)
-
-
-def windowed_event_counts(
-    events: DataFrame, watermark: str = "1 hour", window: str = "1 hour"
-) -> DataFrame:
-    """Tumbling-window counts/sums per event_type with late-data watermark."""
-    events = events.withColumn("ts", F.col("ts").cast("timestamp"))  # NTZ → LTZ
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
-        .agg(F.count("*").alias("n"), F.sum("value").alias("sum_value"))
-        .select(
-            F.col("w.start").alias("win_start"),
-            "event_type",
-            "n",
-            "sum_value",
-        )
-    )
-
-
-def stream_events(spark: SparkSession, path: str, schema) -> DataFrame:
-    return spark.readStream.schema(schema).parquet(path)
 
 
 def stream_interval_join(
@@ -99,53 +61,3 @@ def stream_interval_join(
         F.col("view_id"),
         F.expr("timestampdiff(MICROSECOND, v_ts, c_ts)").alias("lag_us"),
     )
-
-
-def stream_osm(spark: SparkSession, path: str, fmt: str = "xml") -> DataFrame:
-    """Growing extract directory of native OSM files → streaming entities
-    (the incremental-ingest analog of stream_documents for the reference's
-    own input formats). ``fmt``: 'xml' (.osm[.gz|.bz2]) or 'pbf'
-    (.osm.pbf). Each newly-landed file decodes as one unit inside an
-    executor task via the same kernels as the batch readers — binaryFile is
-    a streaming-capable source, so checkpointing/AvailableNow semantics
-    match the documents stream."""
-    bin_schema = (
-        "path string, modificationTime timestamp, length long, content binary"
-    )
-    if fmt == "xml":
-        from ..sources.osm_xml import xml_entities_df
-
-        files = (
-            spark.readStream.format("binaryFile")
-            .schema(bin_schema)
-            .option("pathGlobFilter", "*.osm*")
-            .load(path)
-            .select("path", "content")
-        )
-        return xml_entities_df(files)
-    if fmt == "pbf":
-        from collections.abc import Iterator
-
-        import pandas as pd
-
-        from ..schemas import ENTITY_MIN_SCHEMA
-        from ..sources.osm_pbf import decode_pbf_buffer
-
-        files = (
-            spark.readStream.format("binaryFile")
-            .schema(bin_schema)
-            .option("pathGlobFilter", "*.pbf")
-            .load(path)
-            .select("path", "content")
-        )
-        cols = [f.name for f in ENTITY_MIN_SCHEMA.fields]
-
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                for p, content in zip(pdf["path"], pdf["content"]):
-                    rows = decode_pbf_buffer(bytes(content), origin=p)
-                    if rows:
-                        yield pd.DataFrame(rows, columns=cols)
-
-        return files.mapInPandas(gen, schema=ENTITY_MIN_SCHEMA)
-    raise ValueError(f"stream_osm: unknown fmt {fmt!r} (use 'xml' or 'pbf')")

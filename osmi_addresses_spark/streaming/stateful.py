@@ -1,9 +1,9 @@
 """Custom stateful streaming operator (SURVEY.md §2.7): cross-batch exact
 deduplication via ``applyInPandasWithState``.
 
-The windowed aggregation in `ingest.py` covers the built-in stateful
-surface; this module is the CUSTOM-state pattern — per-key state that
-Spark's built-ins can't express: "emit each content digest's first-seen
+The watermarked interval join in `ingest.py` covers the built-in
+stateful surface; this module is the CUSTOM-state pattern — per-key
+state that Spark's built-ins can't express: "emit each content digest's first-seen
 row once, ever, across the whole life of the stream". `dropDuplicates`
 on a stream needs a watermark and forgets keys past it; training-data
 ingest wants the opposite (a document seen last week is still a dup).

@@ -182,83 +182,6 @@ def test_bbox_filter_matches_oracle_semantics(spark):
     assert got == {"edge"}
 
 
-def test_multi_window_read_equals_union_of_singles(spark, tmp_path):
-    """VERDICT r4 item 6: N windows in ONE scan — result is the set union
-    of the single-window reads (overlapping windows don't duplicate rows),
-    and the OR-of-ranges predicate still reaches the parquet scan."""
-    from osmi_addresses_spark.io.window import read_layer_windows
-
-    store = TableStore(str(tmp_path / "store"))
-    df = _point_layer(spark, n=20_000)
-    clustered = (
-        df.withColumn("_cell", cell_of(F.col("geom.lon"), F.col("geom.lat")))
-        .repartition(2)
-        .sortWithinPartitions("_cell")
-        .drop("_cell")
-    )
-    store.write("layer_pts", clustered, options={"parquet.block.size": "65536"})
-
-    windows = [
-        (1.0, 0.0, 3.0, 1.0),
-        (2.0, 0.0, 5.0, 0.5),   # overlaps the first
-        (15.0, 0.2, 16.0, 0.8),
-    ]
-    multi = read_layer_windows(spark, store, "pts", windows)
-    singles = None
-    for w in windows:
-        s = read_layer_bbox(spark, store, "pts", w)
-        singles = s if singles is None else singles.unionByName(s)
-    union = singles.distinct()
-    assert multi.count() == union.count() > 0
-    assert multi.exceptAll(union).count() == 0
-    assert union.exceptAll(multi).count() == 0
-    plan = multi._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters" in plan and "geom.lon" in plan, plan[:2000]
-
-
-def test_polygon_window_read(spark, tmp_path):
-    """Polygon window = pushed bbox prefilter + exact ray-cast post-filter:
-    a triangle selects exactly the points its even-odd test admits, and a
-    LINESTRING layer refuses (candidate semantics would differ)."""
-    import pytest
-
-    from osmi_addresses_spark.io.window import read_layer_polygon
-
-    store = TableStore(str(tmp_path / "store"))
-    df = _point_layer(spark, n=20_000)
-    store.write("layer_pts", df)
-
-    tri = [(10.0, 0.0), (12.0, 0.0), (11.0, 1.0)]  # open ring: auto-closed
-    got = read_layer_polygon(spark, store, "pts", tri)
-
-    from osmi_addresses_spark.operators.pip import pip_expr
-
-    ring_col = F.array(
-        *[
-            F.struct(F.lit(x).alias("lon"), F.lit(y).alias("lat"))
-            for x, y in tri + [tri[0]]
-        ]
-    )
-    want = df.filter(pip_expr(ring_col, F.col("geom.lon"), F.col("geom.lat")))
-    assert got.count() == want.count() > 0
-    assert got.exceptAll(want).count() == 0
-    # bbox prefilter reached the scan
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters" in plan and "geom.lon" in plan, plan[:2000]
-
-    # linestring layers refuse the polygon path
-    lines = spark.range(10).select(
-        F.col("id").cast("string").alias("way_id"),
-        F.array(
-            F.struct(F.lit(1.0).alias("lon"), F.lit(1.0).alias("lat")),
-            F.struct(F.lit(2.0).alias("lon"), F.lit(2.0).alias("lat")),
-        ).alias("geom"),
-    )
-    store.write("layer_lines", lines)
-    with pytest.raises(NotImplementedError, match="POINT"):
-        read_layer_polygon(spark, store, "lines", tri)
-
-
 def test_tile_window_read(spark, tmp_path):
     """read_layer_tile == bbox read of the tile's extent, and every point
     the pyramid assigns to tile (z,x,y) is inside tile_bounds(z,x,y)."""

@@ -68,6 +68,20 @@ def test_query_vs_oracle(spark, ddb, name):
     )
 
 
+def test_oracle_types_fit_spark(ddb):
+    """Every oracle column must have a type Spark's result can match: no
+    128-bit integer or DECIMAL (DuckDB's SUM over BIGINT widens to HUGEINT
+    while Spark's stays bigint). DESCRIBE binds each query without running
+    it; the value comparison above cannot see the width, since it compares
+    Python ints."""
+    wide = []
+    for name, sql in SE.oracle_sql().items():
+        for col, typ, *_ in ddb.execute(f"DESCRIBE {sql}").fetchall():
+            if any(w in typ.upper() for w in ("HUGEINT", "INT128", "DECIMAL")):
+                wide.append(f"{name}.{col}: {typ}")
+    assert not wide, f"oracle columns wider than int64: {wide}"
+
+
 def test_entry_smoke(spark):
     df = SE.entry(spark)
     assert df.count() > 0

@@ -188,35 +188,35 @@ def test_packed_rejects_overlong_varint():
         _packed(bad)
 
 
-def test_decode_buffer_rejects_truncation(small_world, tmp_path):
-    """A partially-written .pbf (non-atomic drop into a streamed dir) must
-    raise — silently decoding only the complete leading blobs would let the
-    streaming checkpoint commit partial rows and permanently drop the tail
-    (ADVICE r4). Corrupt negative header lengths must not loop either."""
+def test_decode_buffer_rejects_truncation(spark, small_world, tmp_path):
+    """A partially-written or corrupt .pbf must raise on the driver, naming
+    the file, before any decode task runs: silently decoding only the
+    complete leading blobs would drop the tail (ADVICE r4), and a cut blob
+    would only surface later as a zlib error inside a Spark task. Corrupt
+    negative header lengths must not loop either."""
     import struct
 
     import pytest
 
-    from osmi_addresses_spark.sources.osm_pbf import decode_pbf_buffer
-
     p = write_osm_pbf(
         str(tmp_path / "w.osm.pbf"), small_world.nodes, small_world.ways
     )
-    buf = open(p, "rb").read()
-    full = decode_pbf_buffer(buf, origin="full")
-    assert len(full) > 0
+    buf = (tmp_path / "w.osm.pbf").read_bytes()
+    assert len(scan_blobs(p)) > 1
 
-    # truncated mid-blob: the declared datasize overruns the buffer
-    with pytest.raises(ValueError, match="truncated"):
-        decode_pbf_buffer(buf[: len(buf) - 7], origin="cut-mid-blob")
-    # 1-3 trailing garbage bytes where a header length should start
-    with pytest.raises(ValueError, match="trailing"):
-        decode_pbf_buffer(buf + b"\x00\x01", origin="trailing")
-    # corrupt negative BlobHeader length must fail, not move i backwards
-    bad = struct.pack(">i", -12) + buf[4:]
-    with pytest.raises(ValueError, match="BlobHeader length"):
-        decode_pbf_buffer(bad, origin="neg-hlen")
-    # oversized BlobHeader length
-    bad2 = struct.pack(">i", 2**30) + buf[4:]
-    with pytest.raises(ValueError, match="BlobHeader length"):
-        decode_pbf_buffer(bad2, origin="huge-hlen")
+    cases = [
+        # truncated mid-blob: the declared datasize overruns the file
+        ("cut-mid-blob", buf[: len(buf) - 7], "truncated"),
+        # 1-3 trailing garbage bytes where a header length should start
+        ("trailing", buf + b"\x00\x01", "trailing"),
+        # corrupt negative BlobHeader length must fail, not move backwards
+        ("neg-hlen", struct.pack(">i", -12) + buf[4:], "BlobHeader length"),
+        # oversized BlobHeader length
+        ("huge-hlen", struct.pack(">i", 2**30) + buf[4:], "BlobHeader length"),
+    ]
+    for name, content, match in cases:
+        path = tmp_path / f"{name}.osm.pbf"
+        path.write_bytes(content)
+        with pytest.raises(ValueError, match=match) as exc:
+            read_osm_pbf(spark, str(path))
+        assert str(path) in str(exc.value)

@@ -185,47 +185,6 @@ def test_weighted_sample_favors_heavy_docs(spark):
     assert all(i < 20 for i in got), "all winners should be heavy-weight docs"
 
 
-def test_hll_merge_equals_union(spark):
-    # mergeability: max-merge of two register sets == registers of the union
-    from osmi_addresses_spark.operators.sketch import (
-        hll_estimate_from_registers,
-        hll_merge,
-    )
-
-    a = spark.range(0, 3000).select(F.lit("g").alias("grp"), F.col("id").alias("v"))
-    b = spark.range(2000, 5000).select(F.lit("g").alias("grp"), F.col("id").alias("v"))
-    both = a.unionByName(b)
-    merged = hll_merge(
-        [hll_registers(a, ["grp"], "v"), hll_registers(b, ["grp"], "v")], ["grp"]
-    )
-    direct = hll_registers(both, ["grp"], "v")
-    as_set = lambda df: {(r["bucket"], r["reg"]) for r in df.collect()}
-    assert as_set(merged) == as_set(direct)
-    est_m = hll_estimate_from_registers(merged, ["grp"]).collect()[0]["hll_est"]
-    est_d = hll_distinct(both, ["grp"], "v").collect()[0]["hll_est"]
-    assert est_m == est_d  # bit-identical, not just close
-
-
-def test_cms_merge_equals_multiset_union(spark):
-    from osmi_addresses_spark.operators.sketch import cms_counters, cms_merge
-
-    a = spark.createDataFrame([(i % 7,) for i in range(100)], ["v"])
-    b = spark.createDataFrame([(i % 5,) for i in range(80)], ["v"])
-    merged = cms_merge([cms_counters(a, "v", d=2, w=64), cms_counters(b, "v", d=2, w=64)])
-    direct = cms_counters(a.unionByName(b), "v", d=2, w=64)
-    as_set = lambda df: {(r["row"], r["col"], r["cnt"]) for r in df.collect()}
-    assert as_set(merged) == as_set(direct)
-
-
-def test_sketch_merge_rejects_empty_parts():
-    from osmi_addresses_spark.operators.sketch import cms_merge, hll_merge
-
-    with pytest.raises(ValueError):
-        hll_merge([], ["grp"])
-    with pytest.raises(ValueError):
-        cms_merge([])
-
-
 def test_stream_hll_across_batches(spark, tmp_path):
     # two file drops, one checkpoint: complete-mode streaming agg must
     # carry register state across restarts and end bit-identical to the

@@ -1,99 +1,15 @@
-"""Streaming ingest, multimodal plumbing, SimHash / embedding dedup."""
+"""Streaming operators (stateful dedup, interval join), SimHash /
+embedding dedup and the bucketed as-of join."""
 
 import os
 
 import numpy as np
-import pytest
-from pyspark.sql import functions as F
 
 from osmi_addresses_spark.operators.dedup import (
     embedding_near_dups,
     simhash,
     simhash_near_dups,
 )
-from osmi_addresses_spark.operators.media import (
-    FEATURE_DIM,
-    decode_media,
-    extract_media_features,
-)
-from osmi_addresses_spark.sources.parser import parse_documents
-from osmi_addresses_spark.streaming.ingest import (
-    stream_documents,
-    stream_events,
-    windowed_event_counts,
-)
-
-SF_DIR = "/root/testdata/sf0.01"
-
-
-def test_stream_documents_availablenow(spark, small_docs, tmp_path):
-    src = str(tmp_path / "docs_in")
-    small_docs.write.parquet(src)
-    entities = stream_documents(spark, src)
-    assert entities.isStreaming
-    q = (
-        entities.writeStream.format("memory")
-        .queryName("ents_stream")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.sql("SELECT COUNT(*) AS n FROM ents_stream").first()["n"]
-    assert got == small_docs.count()
-    # incremental: drop more files in, restart with availableNow
-    small_docs.limit(10).write.mode("append").parquet(src)
-    q2 = (
-        entities.writeStream.format("memory")
-        .queryName("ents_stream2")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q2.awaitTermination(120)
-    got2 = spark.sql("SELECT COUNT(*) FROM ents_stream2").first()[0]
-    assert got2 == small_docs.count() + 10
-
-
-def test_windowed_event_counts_stream_matches_batch(spark, tmp_path):
-    events = spark.read.parquet(os.path.join(SF_DIR, "events.parquet"))
-    src = str(tmp_path / "events_in")
-    events.write.parquet(src)
-    stream = stream_events(spark, src, events.schema)
-    agg = windowed_event_counts(stream)
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("ev_win")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = spark.sql(
-        "SELECT event_type, SUM(n) AS n FROM ev_win GROUP BY 1 ORDER BY 1"
-    ).collect()
-    want = (
-        events.groupBy("event_type").agg(F.count("*").alias("n")).orderBy("event_type").collect()
-    )
-    # watermark may hold back the final window in append mode; totals must
-    # cover all but at most the last open window per type
-    got_map = {r["event_type"]: r["n"] for r in got}
-    for r in want:
-        assert got_map.get(r["event_type"], 0) >= r["n"] * 0.9
-
-
-def test_media_features(spark, small_docs):
-    entities = parse_documents(small_docs)
-    feats = extract_media_features(entities)
-    rows = feats.collect()
-    assert rows, "fixture contains media spans"
-    for r in rows[:5]:
-        assert len(r["features"]) == FEATURE_DIM
-        assert r["media_ref"].startswith("img://")
-    # deterministic
-    a = decode_media("img://n5/0", fake=True)
-    b = decode_media("img://n5/0", fake=True)
-    assert np.allclose(a, b)
-    with pytest.raises(NotImplementedError):
-        decode_media("img://n5/0")
 
 
 def test_simhash_identical_and_different(spark):
@@ -176,128 +92,6 @@ def test_embedding_near_dups_dim768_parity(spark):
     assert got == want
     for i in range(6):
         assert (i * 2, i * 2 + 1) in got
-
-
-def test_media_phash_paths_agree(spark, small_docs):
-    """The Arrow decode path (binary buffers) and the JVM Column path must
-    produce identical perceptual hashes — they are two implementations of
-    the same synthetic codec."""
-    from osmi_addresses_spark.operators.media import (
-        decode_media_buffers,
-        media_phash_col,
-        media_spans,
-        phash_from_pixels,
-    )
-
-    entities = parse_documents(small_docs)
-    spans = media_spans(entities)
-    bufs = decode_media_buffers(spans).collect()
-    assert bufs and all(len(r["pixels"]) == 64 for r in bufs)
-    via_buffer = {r["media_ref"]: phash_from_pixels(r["pixels"]) for r in bufs}
-    via_column = {
-        r["media_ref"]: r["phash"]
-        for r in spans.select("media_ref")
-        .distinct()
-        .withColumn("phash", media_phash_col(F.col("media_ref")))
-        .collect()
-    }
-    assert via_buffer == via_column
-    assert all(len(p) == 64 and set(p) <= {"0", "1"} for p in via_buffer.values())
-
-
-def test_media_codec_adapter_injection(spark, small_docs):
-    """The codec seam: a custom decoder drops into decode_media_buffers with
-    no other change, its output flows through the same plumbing, and a
-    codec violating the PIXELS-byte contract fails loudly."""
-    import hashlib
-
-    from osmi_addresses_spark.operators.media import (
-        PIXELS,
-        decode_media_buffers,
-        media_spans,
-    )
-
-    entities = parse_documents(small_docs)
-    spans = media_spans(entities)
-
-    def sha_codec(ref: str) -> bytes:
-        out = b""
-        h = ref.encode()
-        while len(out) < PIXELS:
-            h = hashlib.sha256(h).digest()
-            out += h
-        return out[:PIXELS]
-
-    rows = decode_media_buffers(spans, codec=sha_codec).collect()
-    assert rows and all(len(r["pixels"]) == PIXELS for r in rows)
-    want = {r["media_ref"]: sha_codec(r["media_ref"]) for r in rows}
-    assert all(bytes(r["pixels"]) == want[r["media_ref"]] for r in rows)
-
-    def bad_codec(ref: str) -> bytes:
-        return b"short"
-
-    with pytest.raises(Exception, match="codec contract violation"):
-        decode_media_buffers(spans, codec=bad_codec).collect()
-
-
-def test_stream_osm_native_sources_match_batch(spark, small_world, tmp_path):
-    """Native .osm / .osm.pbf incremental ingest (VERDICT r3 item 6): a
-    two-batch file drop consumed with availableNow checkpoints must equal
-    the batch readers' rows, with the second trigger picking up only the
-    newly-landed file."""
-    from osmi_addresses_spark.sources.osm_pbf import read_osm_pbf, write_osm_pbf
-    from osmi_addresses_spark.sources.osm_xml import read_osm_xml, write_osm_xml
-    from osmi_addresses_spark.streaming.ingest import stream_osm
-
-    n_half = len(small_world.nodes) // 2
-
-    def norm(df):
-        return sorted(
-            (
-                r["entity"], r["osm_id"],
-                None if r["lat"] is None else round(r["lat"], 7),
-                None if r["lon"] is None else round(r["lon"], 7),
-                r["lastchange"],
-                tuple(sorted((r["tags"] or {}).items())),
-                tuple(r["refs"] or ()),
-            )
-            for r in df.collect()
-        )
-
-    for fmt, writer, batch_reader, ext in (
-        ("xml", write_osm_xml, read_osm_xml, "osm"),
-        ("pbf", write_osm_pbf, read_osm_pbf, "osm.pbf"),
-    ):
-        src = tmp_path / f"drop_{fmt}"
-        src.mkdir()
-        ckpt = str(tmp_path / f"ckpt_{fmt}")
-        out = str(tmp_path / f"out_{fmt}")
-        writer(str(src / f"a.{ext}"), small_world.nodes[:n_half], small_world.ways)
-        stream = stream_osm(spark, str(src), fmt=fmt)
-        assert stream.isStreaming
-
-        def drain():
-            q = (
-                stream.writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(180)
-
-        drain()
-        got1 = spark.read.parquet(out).count()
-        assert got1 == n_half + len(small_world.ways)
-
-        # second batch lands; the checkpoint makes trigger 2 incremental
-        writer(str(src / f"b.{ext}"), small_world.nodes[n_half:], [])
-        drain()
-        sunk = spark.read.parquet(out)
-        assert sunk.count() == len(small_world.nodes) + len(small_world.ways), fmt
-
-        # stream-vs-batch row equality over the full drop
-        assert norm(sunk) == norm(batch_reader(spark, str(src))), fmt
 
 
 def test_stream_dedup_exact_stateful_across_batches(spark, tmp_path):
@@ -430,59 +224,6 @@ def test_stream_interval_join_across_batches(spark, tmp_path):
     assert got2 == {(10, 1, 30 * 60 * 1_000_000), (11, 3, 5 * 60 * 1_000_000)}, got2
 
 
-def test_resize_buffers_matches_column_mirror(spark):
-    """The Arrow/numpy batch resize (resize_buffers: one reshape-sum per
-    batch) is bit-identical to the pure Column-expression mirror
-    (media_resize_col) and honors the floor-mean contract; non-integer
-    scales are rejected."""
-    import pytest
-
-    from osmi_addresses_spark.operators.media import (
-        decode_media_buffers,
-        media_resize_col,
-        resize_buffers,
-    )
-
-    refs = spark.createDataFrame(
-        [(f"media://obj/{i}",) for i in range(37)], "media_ref string"
-    )
-    decoded = decode_media_buffers(refs)
-    got = {
-        r["media_ref"]: r["resized"].hex()
-        for r in resize_buffers(decoded, src=(8, 8), dst=(4, 4)).collect()
-    }
-    want = {
-        r["media_ref"]: r["hx"]
-        for r in refs.select(
-            "media_ref", media_resize_col(F.col("media_ref"), 4).alias("hx")
-        ).collect()
-    }
-    assert got == want and len(got) == 37
-    # 8x8 -> 2x2 also integer-scaled: spot-check the floor-mean contract
-    # against an independent per-pixel python computation
-    from osmi_addresses_spark.operators.media import _fake_pixels
-
-    r22 = {
-        r["media_ref"]: r["resized"]
-        for r in resize_buffers(decoded, src=(8, 8), dst=(2, 2)).collect()
-    }
-    for ref, buf in list(r22.items())[:5]:
-        px = _fake_pixels(ref)
-        for i in range(4):
-            rr, cc = divmod(i, 2)
-            s = sum(
-                px[(rr * 4 + a) * 8 + cc * 4 + b]
-                for a in range(4)
-                for b in range(4)
-            )
-            assert buf[i] == s // 16, (ref, i)
-    with pytest.raises(ValueError, match="non-integer scale"):
-        resize_buffers(decoded, src=(8, 8), dst=(3, 3))
-    with pytest.raises(ValueError, match="non-integer scale"):
-        media_resize_col(F.col("media_ref"), 3)
-
-
-# -- as-of join: plain vs bucketed identity -------------------------------
 def test_asof_bucketed_matches_plain_on_skewed_data(spark):
     """asof_join_bucketed == asof_join row-for-row, including on a hot key
     whose history dwarfs every other key's, ties at the bucket boundary,
