@@ -9,9 +9,6 @@ The headline metric (BASELINE.json) is addresses validated per second —
 address points (nodes + building centroids + interpolated points) driven
 through the full nearest-street/place pipeline, divided by the end-to-end
 wall time (parse → matches → nodes_with_addresses).
-
-Run with SPARK_GRAFT_SCALING=1 to also run the N-vs-4N-cores scaling
-evidence (see scaling_bench.py for the standalone version).
 """
 
 from __future__ import annotations
@@ -42,7 +39,6 @@ def run_bench(cpus: str, sf_dir: str) -> dict:
     env_sf = os.environ.get("SPARK_GRAFT_FIXTURE_SF")
     sf = float(env_sf) if env_sf else max(sf_of(sf_dir), 4.0)
     fx = write_fixture(sf)
-    pipeline_only = os.environ.get("SPARK_GRAFT_BENCH_ONLY_PIPELINE") == "1"
     # Scratch on DISK, never tmpfs: tmpfs writes are synchronous kernel page
     # allocations and at 32 concurrent tasks the zone-lock/TLB contention
     # dominated the whole pipeline (measured 56 s vs 26 s for the identical
@@ -51,7 +47,7 @@ def run_bench(cpus: str, sf_dir: str) -> dict:
     os.makedirs(scratch_root, exist_ok=True)
     extra = {"spark.local.dir": os.path.join(scratch_root, "spark-bench-local")}
     # event-log mode: emit the driver-idle (serial-floor) decomposition in
-    # the result and let scaling_bench assert thresholds on it
+    # the result and check it against the budget
     eventlog_dir = os.environ.get("SPARK_GRAFT_EVENTLOG")
     if eventlog_dir:
         os.makedirs(eventlog_dir, exist_ok=True)
@@ -101,56 +97,53 @@ def run_bench(cpus: str, sf_dir: str) -> dict:
     timings["other_layers_concurrent"] = time.time() - t0
     t_pipeline = time.time() - t_start
 
-    if not pipeline_only:
-        # training-data ops on the driver tables. Min-of-N per sub-query
-        # (VERDICT r4: single-run sub-query timings on this ±20-50% host
-        # can't distinguish regression from noise — r04's apparent ngram/ann
-        # regressions were unattributable). All runs are recorded alongside
-        # the min so the spread stays visible.
-        repeats = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3"))
-        runs: dict[str, list[float]] = {}
+    # training-data ops on the driver tables. Min-of-N per sub-query: a
+    # single-run timing cannot tell a regression from host noise. All runs
+    # are recorded alongside the min so the spread stays visible.
+    repeats = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3"))
+    runs: dict[str, list[float]] = {}
 
-        def timed_min(name, fn):
-            n = None
-            runs[name] = []
-            for _ in range(max(1, repeats)):
-                t0 = time.time()
-                n = fn()
-                runs[name].append(round(time.time() - t0, 3))
-            timings[name] = min(runs[name])
-            return n
+    def timed_min(name, fn):
+        n = None
+        runs[name] = []
+        for _ in range(max(1, repeats)):
+            t0 = time.time()
+            n = fn()
+            runs[name].append(round(time.time() - t0, 3))
+        timings[name] = min(runs[name])
+        return n
 
-        counts["dedup_ngram_pairs"] = timed_min(
-            "dedup_ngram_jaccard", lambda: d_ngram_jaccard(spark, sf_dir).count()
-        )
-        counts["ann_topk"] = timed_min(
-            "ann_topk", lambda: s_ann_topk(spark, sf_dir).count()
-        )
-        # tiling surface: zoom-pyramid rollup over the validated address
-        # points (reads the checkpointed layer, so this times the rollup
-        # plan itself — one base agg + one tile-count-sized agg)
-        from osmi_addresses_spark.functions.tiles import tile_pyramid
+    counts["dedup_ngram_pairs"] = timed_min(
+        "dedup_ngram_jaccard", lambda: d_ngram_jaccard(spark, sf_dir).count()
+    )
+    counts["ann_topk"] = timed_min(
+        "ann_topk", lambda: s_ann_topk(spark, sf_dir).count()
+    )
+    # tiling surface: zoom-pyramid rollup over the validated address
+    # points (reads the checkpointed layer, so this times the rollup
+    # plan itself — one base agg + one tile-count-sized agg)
+    from osmi_addresses_spark.functions.tiles import tile_pyramid
 
-        nwa_pts = layers["nodes_with_addresses"].select(
-            F.col("geom.lon").alias("lon"), F.col("geom.lat").alias("lat")
-        )
-        counts["tile_rollup_tiles"] = timed_min(
-            "tile_rollup", lambda: tile_pyramid(nwa_pts, 6, 16).count()
-        )
-        # sketch surface: deterministic HLL distinct + CMS heavy hitters
-        # (round-5 sketches; both are bounded-state map-side-combined aggs,
-        # so their wall time is essentially one scan each)
-        from osmi_addresses_spark.driver_queries import (
-            d_heavy_hitters,
-            q_hll_distinct,
-        )
+    nwa_pts = layers["nodes_with_addresses"].select(
+        F.col("geom.lon").alias("lon"), F.col("geom.lat").alias("lat")
+    )
+    counts["tile_rollup_tiles"] = timed_min(
+        "tile_rollup", lambda: tile_pyramid(nwa_pts, 6, 16).count()
+    )
+    # sketch surface: deterministic HLL distinct + CMS heavy hitters
+    # (round-5 sketches; both are bounded-state map-side-combined aggs,
+    # so their wall time is essentially one scan each)
+    from osmi_addresses_spark.driver_queries import (
+        d_heavy_hitters,
+        q_hll_distinct,
+    )
 
-        counts["hll_groups"] = timed_min(
-            "approx_distinct_hll", lambda: q_hll_distinct(spark, sf_dir).count()
-        )
-        counts["cms_heavy_hitters"] = timed_min(
-            "heavy_hitters_cms", lambda: d_heavy_hitters(spark, sf_dir).count()
-        )
+    counts["hll_groups"] = timed_min(
+        "approx_distinct_hll", lambda: q_hll_distinct(spark, sf_dir).count()
+    )
+    counts["cms_heavy_hitters"] = timed_min(
+        "heavy_hitters_cms", lambda: d_heavy_hitters(spark, sf_dir).count()
+    )
 
     n_validated = counts["nodes_with_addresses"]
     result = {
@@ -163,17 +156,16 @@ def run_bench(cpus: str, sf_dir: str) -> dict:
         "n_validated": n_validated,
         "pipeline_sec": round(t_pipeline, 3),
         "counts": counts,
+        "subquery_runs": runs,
+        "subquery_estimator": f"min-of-{max(1, repeats)}",
     }
-    if not pipeline_only:
-        result["subquery_runs"] = runs
-        result["subquery_estimator"] = f"min-of-{max(1, repeats)}"
     app_id = spark.sparkContext.applicationId
     spark.stop()
     shutil.rmtree(workdir, ignore_errors=True)
     if eventlog_dir:
         try:
             sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "tools"))
-            from stage_report import serial_floor_metrics
+            from stage_report import serial_floor_metrics, serial_floor_violations
 
             logdir = os.path.join(eventlog_dir, f"eventlog_v2_{app_id}")
             sfm = serial_floor_metrics(
@@ -182,17 +174,9 @@ def run_bench(cpus: str, sf_dir: str) -> dict:
                 window_end_ms=int((t_start + t_pipeline) * 1000),
             )
             result["serial_floor"] = sfm
-            # regression guard (VERDICT r4 item 8): the committed driver-idle
-            # budget is enforced by the DEFAULT bench run, not only
-            # scaling_bench — violations are reported in the JSON and fail
-            # the process (after printing, so the measurement survives).
-            max_gap = float(os.environ.get("SPARK_GRAFT_MAX_GAP_S", "10"))
-            max_total = float(os.environ.get("SPARK_GRAFT_MAX_TOTAL_GAP_S", "40"))
-            viol = []
-            if sfm["max_gap_s"] > max_gap:
-                viol.append(f"driver-idle gap {sfm['max_gap_s']}s > {max_gap}s")
-            if sfm["total_gap_s"] > max_total:
-                viol.append(f"total driver-idle {sfm['total_gap_s']}s > {max_total}s")
+            # violations are reported in the JSON and fail the process
+            # (after printing, so the measurement survives)
+            viol = serial_floor_violations(sfm)
             if viol:
                 result["serial_floor_violations"] = viol
         except Exception as ex:  # the bench result must survive a log-parse hiccup
@@ -202,7 +186,7 @@ def run_bench(cpus: str, sf_dir: str) -> dict:
 
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
     result = run_bench(cpus, sf_dir)
     print(json.dumps(result))
     if result.get("serial_floor_violations"):

@@ -122,8 +122,8 @@ def run_all(
     # Independent subtree constructions run on a small thread pool: plan
     # building is driver-side py4j chatter (the cluster idles through it),
     # py4j is thread-safe with one connection per thread, and the round
-    # trips overlap — part of the serial-floor work (BASELINE.md scaling
-    # rule). The DAG built is identical to the sequential form.
+    # trips overlap — part of the serial-floor work (tools/stage_report.py
+    # driver-idle budget). The DAG built is identical to the sequential form.
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=4) as pool:

@@ -138,26 +138,38 @@ def test_sqlite_diff_table_in_neither_dir(spark, small_docs, tmp_path):
 def test_serial_floor_metrics_no_app_start(tmp_path):
     """serial_floor_metrics with neither ApplicationStart nor an explicit
     window anchors at the first job's submission (ADVICE r4: t0=None used to
-    TypeError in max(s, None))."""
+    TypeError in max(s, None)). serial_floor_violations passes its 3 s gap
+    and trips on one 12 s gap."""
     import json as _json
 
-    from tools.stage_report import serial_floor_metrics
+    from tools.stage_report import serial_floor_metrics, serial_floor_violations
 
-    log = tmp_path / "evlog"
-    log.mkdir()
-    events = [
-        {"Event": "SparkListenerJobStart", "Job ID": 0, "Submission Time": 1000},
-        {"Event": "SparkListenerJobEnd", "Job ID": 0, "Completion Time": 3000},
-        {"Event": "SparkListenerJobStart", "Job ID": 1, "Submission Time": 6000},
-        {"Event": "SparkListenerJobEnd", "Job ID": 1, "Completion Time": 8000},
-    ]
-    with open(log / "events_app", "w") as f:
-        for ev in events:
-            f.write(_json.dumps(ev) + "\n")
-    m = serial_floor_metrics(str(log))
+    def write_log(name, second_job_at_ms):
+        log = tmp_path / name
+        log.mkdir()
+        events = [
+            {"Event": "SparkListenerJobStart", "Job ID": 0, "Submission Time": 1000},
+            {"Event": "SparkListenerJobEnd", "Job ID": 0, "Completion Time": 3000},
+            {"Event": "SparkListenerJobStart", "Job ID": 1,
+             "Submission Time": second_job_at_ms},
+            {"Event": "SparkListenerJobEnd", "Job ID": 1,
+             "Completion Time": second_job_at_ms + 2000},
+        ]
+        with open(log / "events_app", "w") as f:
+            for ev in events:
+                f.write(_json.dumps(ev) + "\n")
+        return str(log)
+
+    m = serial_floor_metrics(write_log("evlog", 6000))
     assert m["n_jobs"] == 2
     assert m["span_s"] == 7.0  # 1000..8000 anchored at first submission
     assert m["total_gap_s"] == 3.0  # 3000..6000
+    assert serial_floor_violations(m) == []
+    # one 12 s gap (3000..15000) breaks the single-gap budget, not the total
+    slow = serial_floor_metrics(write_log("evlog_slow", 15000))
+    viol = serial_floor_violations(slow)
+    assert len(viol) == 1
+    assert "12.0s" in viol[0] and "gap" in viol[0]
     # and the empty-log case stays total-zero, not an exception
     empty = tmp_path / "evlog2"
     empty.mkdir()

@@ -173,8 +173,8 @@ def main():
     n_hot = int(sys.argv[1]) if len(sys.argv) > 1 else 400_000
     n_uni = int(sys.argv[2]) if len(sys.argv) > 2 else 1_600_000
     # Repeat protocol (ADVICE r4): this host shows ±20–50% run-to-run CPU
-    # variance (see scaling_bench docstring), so a single-run core-seconds
-    # ratio is too noisy for a hard 1.3x gate. With repeats >= 2 we gate on
+    # variance (history/BENCH_SCALING*.json record it), so a single-run
+    # core-seconds ratio is too noisy for a hard 1.3x gate. With repeats >= 2 we gate on
     # the min-of-N ratio at 1.3x; with a single run the 1.3x check is a
     # warning and only a >2.0x ratio (beyond documented noise) hard-fails.
     # Result-equality stays the unconditional hard gate either way.

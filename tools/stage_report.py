@@ -3,6 +3,10 @@
 shuffle / spill metrics, sorted by wall time. Usage:
 
     python tools/stage_report.py <eventLog.dir> [topN]
+    python tools/stage_report.py --gaps <eventLog.dir>
+
+``--gaps`` prints the driver-idle decomposition and exits 1 when it
+breaks the budget (``serial_floor_violations``).
 
 Works with rolling event logs (events_* files, optionally zstd)."""
 
@@ -15,6 +19,11 @@ import os
 import statistics
 import subprocess
 import sys
+
+# Driver-idle budget (seconds) for the inter-job gaps of one pipeline run:
+# the longest single gap, and the sum of all gaps.
+MAX_GAP_S = 10.0
+MAX_TOTAL_GAP_S = 40.0
 
 
 def load_lines(logdir: str) -> list[str]:
@@ -175,23 +184,17 @@ def serial_floor_metrics(
     }
 
 
-def check_serial_floor(logdir: str, max_gap_s: float = 8.0,
-                       max_total_gap_s: float = 30.0) -> list[str]:
-    """Regression guard (VERDICT r3 item 7): returns human-readable
-    violations when driver-idle gaps exceed the thresholds. Empty list =
-    clean. The first gap (session bring-up before job 0) is included on
-    purpose — warm-up belongs before the timed window, and a regression
-    there is still a regression."""
-    m = serial_floor_metrics(logdir)
+def serial_floor_violations(sfm: dict) -> list[str]:
+    """The driver-idle budget: human-readable violations of
+    ``serial_floor_metrics`` output against MAX_GAP_S and MAX_TOTAL_GAP_S.
+    Empty list = within budget."""
     out = []
-    if m["max_gap_s"] > max_gap_s:
+    if sfm["max_gap_s"] > MAX_GAP_S:
+        out.append(f"driver-idle gap {sfm['max_gap_s']}s > {MAX_GAP_S}s")
+    if sfm["total_gap_s"] > MAX_TOTAL_GAP_S:
         out.append(
-            f"max inter-job driver-idle gap {m['max_gap_s']}s > {max_gap_s}s"
-        )
-    if m["total_gap_s"] > max_total_gap_s:
-        out.append(
-            f"total driver-idle {m['total_gap_s']}s > {max_total_gap_s}s "
-            f"(span {m['span_s']}s, {m['n_jobs']} jobs)"
+            f"total driver-idle {sfm['total_gap_s']}s > {MAX_TOTAL_GAP_S}s "
+            f"(span {sfm['span_s']}s, {sfm['n_jobs']} jobs)"
         )
     return out
 
@@ -201,11 +204,7 @@ if __name__ == "__main__":
         args = [a for a in sys.argv[1:] if a != "--gaps"]
         m = serial_floor_metrics(args[0])
         print(json.dumps(m, indent=1))
-        viol = check_serial_floor(
-            args[0],
-            max_gap_s=float(args[1]) if len(args) > 1 else 8.0,
-            max_total_gap_s=float(args[2]) if len(args) > 2 else 30.0,
-        )
+        viol = serial_floor_violations(m)
         for v in viol:
             print("VIOLATION:", v, file=sys.stderr)
         sys.exit(1 if viol else 0)
