@@ -249,225 +249,3 @@ def export_layers(layers: dict[str, DataFrame], out_dir: str) -> dict[str, str]:
     """Export all 11 reference layers as SpatiaLite files — the drop-in
     replacement for the reference's output directory."""
     return {name: export_layer(layers[name], name, out_dir) for name in LAYER_FIELDS}
-
-
-# -- distributed sharded export -------------------------------------------
-#
-# `export_layer` streams encoded rows through the driver because one
-# `.sqlite` file has exactly one writer — the format's nature, and the
-# reference's own profile (single-threaded GDAL writer). At planet scale
-# that last mile becomes the only non-distributed stage, so this variant
-# removes it: every partition writes a COMPLETE, valid SpatiaLite file
-# (same schema, metadata pair and R*Tree as the single-file contract)
-# executor-side, and the driver collects only (shard name, row count).
-# Consumers either read the shard directory directly (each file is
-# independently QGIS/spatialite-readable) or run `merge_sqlite_shards` —
-# an sqlite ATTACH-based merge that copies rows and R*Tree entries
-# C-side, never re-encoding a blob and never looping rows in Python.
-
-
-def _fs_and_path(path: str):
-    """pyarrow.fs resolution mirroring sources/osm_pbf._open_ranged: URIs
-    (s3://, gs://, hdfs://, file://) go through FileSystem.from_uri so the
-    shard upload works from any executor; plain paths stay local."""
-    import pyarrow.fs as pafs
-
-    if "://" in path:
-        return pafs.FileSystem.from_uri(path)
-    return pafs.LocalFileSystem(), path
-
-
-def export_layer_sharded(
-    df: DataFrame,
-    name: str,
-    out_dir: str,
-    shards: int | None = None,
-    batch: int = 10_000,
-) -> list[str]:
-    """Write <out_dir>/osmi_addresses_<name>/shard-NNNNN.sqlite, one valid
-    SpatiaLite file per partition, written BY the executors (driver sees
-    only the manifest). `shards` repartitions first; None keeps the
-    incoming partitioning (e.g. cell-clustered layer reads, which makes
-    each shard spatially coherent). Returns the shard paths in order."""
-    table = f"osmi_addresses_{name}"
-    shard_dir = os.path.join(out_dir, table)
-    fs, fs_dir = _fs_and_path(shard_dir)
-    fs.delete_dir_contents(fs_dir, missing_dir_ok=True)
-    fs.create_dir(fs_dir, recursive=True)
-
-    kind = _geom_kind(df)
-    attr_fields = [(n, t) for n, t in LAYER_FIELDS[name] if n != "geom"]
-    attr_cols = [(n, _sqlite_type(t)) for n, t in attr_fields]
-    attr_names = [n for n, _ in attr_fields]
-    encoded = _with_blob(df.select(*[n for n, _ in LAYER_FIELDS[name]]))
-    if shards is not None:
-        encoded = encoded.repartition(shards)
-
-    ins = (
-        f'INSERT INTO "{table}" (GEOMETRY, '
-        + ", ".join(f'"{n}"' for n in attr_names)
-        + ") VALUES ("
-        + ",".join("?" * (1 + len(attr_names)))
-        + ")"
-    )
-    idx_ins = f'INSERT INTO "idx_{table}_GEOMETRY" VALUES (?,?,?,?,?)'
-
-    int_cols = {n for n, t in attr_cols if t == "INTEGER"}
-
-    def _pyval(v, is_int: bool):
-        # Arrow→pandas renders nullable ints as float64 (NaN for null);
-        # sqlite must see native python ints/strs/None, never numpy scalars
-        if v is None or (isinstance(v, float) and v != v):
-            return None
-        if is_int:
-            return int(v)
-        return v.item() if hasattr(v, "item") else v
-
-    def write_shard(pdf_iter):
-        import tempfile
-
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        shard = f"shard-{pid:05d}.sqlite"
-        tmp = tempfile.NamedTemporaryFile(suffix=".sqlite", delete=False)
-        tmp.close()
-        os.remove(tmp.name)
-        con = _init_db(tmp.name, table, kind, attr_cols)
-        fid = 0
-        try:
-            cur = con.cursor()
-            for pdf in pdf_iter:
-                for lo in range(0, len(pdf), batch):
-                    chunk = pdf.iloc[lo : lo + batch]
-                    attrs = [
-                        [_pyval(v, n in int_cols) for v in chunk[n]]
-                        for n in attr_names
-                    ]
-                    boxes = chunk[["_xmin", "_xmax", "_ymin", "_ymax"]].to_numpy()
-                    cur.execute("BEGIN")
-                    cur.executemany(
-                        ins, list(zip(chunk["GEOMETRY"].tolist(), *attrs))
-                    )
-                    cur.executemany(
-                        idx_ins,
-                        [
-                            (fid + i + 1, *(float(x) for x in b))
-                            for i, b in enumerate(boxes)
-                            if b[0] == b[0]
-                        ],
-                    )
-                    cur.execute("COMMIT")
-                    fid += len(chunk)
-            con.close()
-            # publish via attempt-unique temp + rename so a speculative or
-            # retried attempt never interleaves writes into the final name
-            # (rename is atomic on local/HDFS; on object stores the final
-            # single-object copy is already atomic)
-            tc = TaskContext.get()
-            wfs, wdir = _fs_and_path(shard_dir)
-            tmp_name = f"{wdir}/.{shard}.attempt-{tc.taskAttemptId()}"
-            with open(tmp.name, "rb") as src, wfs.open_output_stream(
-                tmp_name
-            ) as dst:
-                while True:
-                    b = src.read(1 << 22)
-                    if not b:
-                        break
-                    dst.write(b)
-            wfs.move(tmp_name, f"{wdir}/{shard}")
-        finally:
-            if os.path.exists(tmp.name):
-                os.remove(tmp.name)
-        yield pd.DataFrame([{"shard": shard, "rows": fid}])
-
-    manifest = encoded.mapInPandas(
-        write_shard, schema="shard string, rows long"
-    ).collect()
-    return [
-        os.path.join(shard_dir, r["shard"])
-        for r in sorted(manifest, key=lambda r: r["shard"])
-    ]
-
-
-def _localize_shard(path: str, tmp_dir: str) -> str:
-    """sqlite can only open local files; a shard that lives behind a
-    pyarrow.fs URI (s3://, hdfs://, …) is downloaded to tmp_dir first.
-    Plain paths are returned as-is (they must be driver-readable — i.e. a
-    shared filesystem on a multi-node cluster; use a URI otherwise)."""
-    if "://" not in path:
-        return path
-    fs, fs_path = _fs_and_path(path)
-    local = os.path.join(tmp_dir, os.path.basename(fs_path))
-    with fs.open_input_stream(fs_path) as src, open(local, "wb") as dst:
-        while True:
-            b = src.read(1 << 22)
-            if not b:
-                break
-            dst.write(b)
-    return local
-
-
-def merge_sqlite_shards(shard_paths: list[str], name: str, out_dir: str) -> str:
-    """ATTACH-merge executor-written shards into the single-file reference
-    contract. Rows and R*Tree entries are copied inside sqlite (no blob
-    re-encode, no Python row loop); shard fids are contiguous from 1, so
-    the R*Tree pkids re-base by the running row count. URI shard paths
-    (object store / HDFS) are streamed to a local temp dir first — sqlite
-    cannot ATTACH a remote object."""
-    import shutil
-    import tempfile
-
-    if not shard_paths:
-        raise ValueError("merge_sqlite_shards: empty shard list")
-    tmp_dir = None
-    if any("://" in p for p in shard_paths):
-        tmp_dir = tempfile.mkdtemp(prefix="osmi_shard_merge_")
-        shard_paths = [_localize_shard(p, tmp_dir) for p in shard_paths]
-    try:
-        return _merge_local_shards(shard_paths, name, out_dir)
-    finally:
-        if tmp_dir:
-            shutil.rmtree(tmp_dir, ignore_errors=True)
-
-
-def _merge_local_shards(shard_paths: list[str], name: str, out_dir: str) -> str:
-    table = f"osmi_addresses_{name}"
-    path = os.path.join(out_dir, f"{table}.sqlite")
-    if os.path.exists(path):
-        os.remove(path)
-    os.makedirs(out_dir, exist_ok=True)
-    first = sqlite3.connect(shard_paths[0])
-    kind = first.execute(
-        "SELECT type FROM geometry_columns WHERE f_table_name = ?", (table,)
-    ).fetchone()[0]
-    attr_cols = [
-        (r[1], r[2])
-        for r in first.execute(f'PRAGMA table_info("{table}")')
-        if r[1] not in ("OGC_FID", "GEOMETRY")
-    ]
-    first.close()
-    con = _init_db(path, table, kind, attr_cols)
-    col_list = "GEOMETRY" + "".join(f', "{n}"' for n, _ in attr_cols)
-    try:
-        for sp in shard_paths:
-            con.execute("ATTACH ? AS sh", (sp,))
-            base = con.execute(
-                f'SELECT COALESCE(MAX(OGC_FID), 0) FROM main."{table}"'
-            ).fetchone()[0]
-            con.execute("BEGIN")
-            con.execute(
-                f'INSERT INTO main."{table}" ({col_list}) '
-                f'SELECT {col_list} FROM sh."{table}" ORDER BY OGC_FID'
-            )
-            con.execute(
-                f'INSERT INTO main."idx_{table}_GEOMETRY" '
-                f"SELECT pkid + {base}, xmin, xmax, ymin, ymax "
-                f'FROM sh."idx_{table}_GEOMETRY"'
-            )
-            con.execute("COMMIT")
-            con.execute("DETACH sh")
-    finally:
-        con.close()
-    return path
-

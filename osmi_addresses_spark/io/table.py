@@ -14,15 +14,11 @@ Provides the north-rule requirements:
   manifest flips to it atomically LAST — the previous committed version is
   never touched, so a crash mid-write leaves the prior snapshot fully
   readable. `read(..., version=N)` time-travels, `versions()`
-  lists snapshots, `vacuum(keep=K)` retires old data dirs, and
-  `compact()` rewrites the current snapshot into ~target-size files as a
-  new version (small-file compaction — at 100 TB the file count, not the
-  byte count, is what kills scan planning and commit latency).
+  lists snapshots, and `vacuum(keep=K)` retires old data dirs.
 
-Also the engine's answer to "cache vs recompute" at 100 TB: wide shared
-intermediates (parsed entities, assembled way geometries) are checkpointed
-here so every downstream consumer gets a column-pruned parquet scan instead
-of a racy in-memory cache rebuild.
+Wide shared intermediates (parsed entities, assembled way geometries) are
+checkpointed here so every downstream consumer gets a column-pruned parquet
+scan instead of a racy in-memory cache rebuild.
 """
 
 from __future__ import annotations
@@ -37,17 +33,20 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 def _fingerprint(path: str) -> dict:
-    """Cheap lineage fingerprint of an input dataset path."""
+    """Cheap lineage fingerprint of an input dataset path: size and
+    nanosecond mtime of every file under it, keyed by relative path, so a
+    change inside a partition subdirectory (`region=a/part-*.parquet`)
+    changes the fingerprint too."""
     out = {}
     if os.path.isdir(path):
-        for f in sorted(os.listdir(path)):
-            fp = os.path.join(path, f)
-            if os.path.isfile(fp):
+        for dirpath, _, filenames in os.walk(path):
+            for f in filenames:
+                fp = os.path.join(dirpath, f)
                 st = os.stat(fp)
-                out[f] = [st.st_size, int(st.st_mtime)]
+                out[os.path.relpath(fp, path)] = [st.st_size, st.st_mtime_ns]
     elif os.path.isfile(path):
         st = os.stat(path)
-        out[os.path.basename(path)] = [st.st_size, int(st.st_mtime)]
+        out[os.path.basename(path)] = [st.st_size, st.st_mtime_ns]
     return out
 
 
@@ -255,134 +254,3 @@ class TableStore:
                 if entry.startswith("v") and entry not in referenced:
                     shutil.rmtree(os.path.join(sdir, entry), ignore_errors=True)
         return drop
-
-    def merge(
-        self,
-        spark: SparkSession,
-        name: str,
-        updates: DataFrame,
-        key_cols: list[str],
-        deletes: DataFrame | None = None,
-        sort_within: list | None = None,
-    ) -> str:
-        """MERGE (upsert + optional delete) by key, as a NEW snapshot —
-        the Iceberg MERGE INTO analog on the copy-on-write path: rows of
-        the current snapshot whose key matches `updates` (or `deletes`)
-        are replaced (or dropped), everything else is carried; the result
-        commits as the next version, so readers of the old snapshot are
-        unaffected and time travel still sees the pre-merge table.
-
-        `deletes` needs only the key columns; `updates` may carry no column
-        the table lacks (ValueError, not a silent drop). `sort_within` re-applies the
-        original writer's in-file clustering (same contract as `compact` —
-        without it a merged layer table would lose row-group pruning).
-        First merge into a missing table degenerates to a plain write.
-
-        Scale shape: one LEFT ANTI hash join per side keyed on `key_cols`
-        (the updates/deletes side is typically small → AQE broadcasts it)
-        plus the snapshot write; the current data is never rewritten in
-        place."""
-        from pyspark.sql import functions as F
-
-        if any(k not in updates.columns for k in key_cols):
-            raise ValueError(f"merge keys absent from updates: {key_cols}")
-        # MERGE's contract is one action per key: reject updates that carry
-        # duplicate or NULL keys instead of silently committing a
-        # non-keyed snapshot (Iceberg MERGE INTO errors on multi-match
-        # too). One small agg over the updates side.
-        any_null = F.lit(False)
-        for k in key_cols:
-            any_null = any_null | F.col(k).isNull()
-        bad = (
-            updates.groupBy(*key_cols)
-            .agg(F.count(F.lit(1)).alias("c"))
-            .agg(
-                F.max("c").alias("maxc"),
-                F.count(F.when(any_null, 1)).alias("nulls"),
-            )
-            .collect()[0]
-        )
-        if (bad["maxc"] or 0) > 1:
-            raise ValueError("updates contain duplicate rows per merge key")
-        if bad["nulls"]:
-            raise ValueError("updates contain NULL merge keys")
-        lineage_mark = {"keys": key_cols, "deletes": deletes is not None}
-        m = self.manifest(name)
-        if m is None:
-            if deletes is not None:
-                raise KeyError(f"cannot delete from missing table {name!r}")
-            first = (
-                updates.sortWithinPartitions(*sort_within)
-                if sort_within
-                else updates
-            )
-            return self.write(name, first, lineage={"last_merge": lineage_mark})
-        cur = self.read(spark, name)
-        missing = [k for k in key_cols if k not in cur.columns]
-        if missing:
-            raise ValueError(f"merge keys absent from table: {missing}")
-        extra = [c for c in updates.columns if c not in cur.columns]
-        if extra:
-            raise ValueError(f"update columns absent from table {name!r}: {extra}")
-        survivors = cur.join(updates.select(*key_cols).distinct(), key_cols, "left_anti")
-        if deletes is not None:
-            survivors = survivors.join(
-                deletes.select(*key_cols).distinct(), key_cols, "left_anti"
-            )
-            upserts = updates.join(
-                deletes.select(*key_cols).distinct(), key_cols, "left_anti"
-            )
-        else:
-            upserts = updates
-        merged = survivors.unionByName(upserts.select(*cur.columns))
-        if sort_within:
-            merged = merged.sortWithinPartitions(*sort_within)
-        lineage = dict(m.get("lineage") or {})
-        lineage["last_merge"] = lineage_mark
-        return self.write(
-            name,
-            merged,
-            partition_by=(m.get("partition_by") or None),
-            lineage=lineage,
-            options=m.get("write_options") or None,
-        )
-
-    def compact(
-        self,
-        spark: SparkSession,
-        name: str,
-        target_bytes: int = 128 << 20,
-        sort_within: list | None = None,
-    ) -> str:
-        """Small-file compaction: rewrite the current snapshot into
-        ~target_bytes files as a NEW version (readers of the old snapshot
-        are unaffected; `vacuum` reclaims it later). File count is sized
-        from the manifest's byte metrics — no data scan to plan the job.
-        Lineage is carried over unchanged so a following `write_once` with
-        the same source still skips. Partitioned tables repartition on
-        their partition columns so each output task writes one file per
-        value it holds. `sort_within` (Column exprs) re-applies in-file
-        clustering the original writer used — without it a compacted layer
-        table would lose the min/max row-group pruning window reads depend
-        on."""
-        import math
-
-        m = self.manifest(name)
-        if not m:
-            raise KeyError(f"no committed table {name!r}")
-        total = sum(p["bytes"] for p in m.get("partitions", {}).values())
-        nfiles = max(1, math.ceil(total / target_bytes))
-        df = self.read(spark, name)
-        pby = m.get("partition_by") or []
-        df = df.repartition(nfiles, *pby) if pby else df.repartition(nfiles)
-        if sort_within:
-            df = df.sortWithinPartitions(*sort_within)
-        return self.write(
-            name,
-            df,
-            partition_by=pby or None,
-            lineage=m.get("lineage") or None,
-            # carry the original writer options (row-group sizing etc.) so
-            # compaction doesn't change the table's physical contract
-            options=m.get("write_options") or None,
-        )

@@ -273,9 +273,8 @@ def run_all(
 def layer_cluster_expr(df: DataFrame):
     """The grid-cell clustering key a layer table is sorted by within
     files (S5): point layers by their cell, LINESTRING layers by the first
-    vertex's cell. None for geometry-less tables. Shared by write_layers
-    and snapshot compaction so a compacted layer keeps the min/max
-    row-group pruning that window reads depend on."""
+    vertex's cell. None for geometry-less tables. The min/max row-group
+    pruning that window reads depend on comes from this sort."""
     from ..functions.cells import cell_of
 
     if "geom" not in df.columns:

@@ -224,49 +224,3 @@ def test_tile_window_read(spark, tmp_path):
     for r in both:
         bw, bs, be, bn = tile_bounds(z, r["xt"], r["yt"])
         assert bw <= r["lon"] <= be and bs <= r["lat"] <= bn
-
-
-def test_compaction_preserves_window_pruning(spark, tmp_path):
-    """store.compact with the layer's cluster expr + carried write options
-    keeps the window-read contract: identical bbox results AND the same
-    row-group min/max prunability (small row groups, cell-sorted files)."""
-    from osmi_addresses_spark.plans.pipeline import layer_cluster_expr
-
-    store = TableStore(str(tmp_path / "store"))
-    df = _point_layer(spark)
-    clustered = (
-        df.withColumn("_cell", cell_of(F.col("geom.lon"), F.col("geom.lat")))
-        .repartition(4)
-        .sortWithinPartitions("_cell")
-        .drop("_cell")
-    )
-    store.write("layer_pts", clustered, options={"parquet.block.size": "65536"})
-    before = {tuple(r) for r in read_layer_bbox(spark, store, "pts", BBOX).collect()}
-
-    store.compact(
-        spark, "layer_pts",
-        sort_within=[layer_cluster_expr(store.read(spark, "layer_pts"))],
-    )
-    assert store.manifest("layer_pts")["version"] == 2
-    after_df = read_layer_bbox(spark, store, "pts", BBOX)
-    assert {tuple(r) for r in after_df.collect()} == before and len(before) > 0
-
-    total = overlapping = 0
-    root = store._dir("layer_pts")
-    for f in os.listdir(root):
-        if not f.endswith(".parquet"):
-            continue
-        md = pq.ParquetFile(os.path.join(root, f)).metadata
-        sch = md.schema
-        lon_idx = next(
-            i for i in range(len(sch)) if sch.column(i).path == "geom.lon"
-        )
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(lon_idx).statistics
-            total += 1
-            if st.min <= BBOX[2] and st.max >= BBOX[0]:
-                overlapping += 1
-    assert total >= 8, f"compaction lost the small row groups: {total}"
-    assert overlapping < total / 2, (
-        f"compaction lost cell clustering: {overlapping}/{total} overlap"
-    )

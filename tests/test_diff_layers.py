@@ -178,46 +178,6 @@ def test_serial_floor_metrics_no_app_start(tmp_path):
     assert m2["n_jobs"] == 0
 
 
-def test_sqlite_diff_reads_sharded_export(spark, small_docs, tmp_path):
-    """A sharded export dir (osmi_addresses_<name>/shard-*.sqlite) diffs
-    clean against the equivalent single-file export, and an injected change
-    in one shard is caught."""
-    import sqlite3
-
-    from osmi_addresses_spark.io.spatialite import export_layer, export_layer_sharded
-
-    layers = run_all(spark, small_docs, store=TableStore(str(tmp_path / "store")))
-    export_layer(layers["entrances"], "entrances", str(tmp_path / "single"))
-    shard_paths = export_layer_sharded(
-        layers["entrances"], "entrances", str(tmp_path / "sharded"), shards=3
-    )
-
-    clean = diff_stores(
-        spark, str(tmp_path / "single"), str(tmp_path / "sharded"), tables=["entrances"]
-    )
-    assert is_clean(clean), clean
-
-    con = sqlite3.connect(shard_paths[0])
-    n0 = con.execute("SELECT COUNT(*) FROM osmi_addresses_entrances").fetchone()[0]
-    if n0 == 0:  # make sure the mutated shard actually has a row
-        con.close()
-        con = sqlite3.connect(
-            max(shard_paths, key=lambda p: sqlite3.connect(p).execute(
-                "SELECT COUNT(*) FROM osmi_addresses_entrances").fetchone()[0])
-        )
-    con.execute(
-        "DELETE FROM osmi_addresses_entrances WHERE OGC_FID = "
-        "(SELECT MIN(OGC_FID) FROM osmi_addresses_entrances)"
-    )
-    con.commit()
-    con.close()
-    report = diff_stores(
-        spark, str(tmp_path / "single"), str(tmp_path / "sharded"), tables=["entrances"]
-    )
-    assert not is_clean(report)
-    assert report["entrances"]["only_a"] == 1 and report["entrances"]["only_b"] == 0
-
-
 def test_diff_two_versions_of_one_store(spark, tmp_path):
     """Same store dir on both sides + version-a/version-b: the snapshot
     diff — v1 vs v2 reports exactly the changed rows, v2 vs v2 is clean,

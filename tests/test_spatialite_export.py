@@ -282,106 +282,12 @@ def test_point_export_null_geom(spark, tmp_path):
     assert ("1", 0) in rows and ("2", 1) in rows
 
 
-def test_sharded_export_matches_single(testzone_layers, exported, tmp_path_factory):
-    """Distributed shard write (executors write complete SpatiaLite files;
-    the driver sees only the manifest) + ATTACH merge == the single-file
-    driver-streamed export, for one POINT and one LINESTRING layer."""
-    import struct
-    from collections import Counter
-
-    from osmi_addresses_spark.io.spatialite import (
-        export_layer_sharded,
-        merge_sqlite_shards,
-    )
-
-    out_single, _ = exported
-    out = str(tmp_path_factory.mktemp("spatialite_sharded"))
-
-    def contents(path, table):
-        con = sqlite3.connect(path)
-        cols = [
-            r[1]
-            for r in con.execute(f'PRAGMA table_info("{table}")')
-            if r[1] != "OGC_FID"
-        ]
-        sel = ", ".join(f'"{c}"' for c in cols)
-        rows = con.execute(f'SELECT {sel} FROM "{table}"').fetchall()
-        nidx = con.execute(
-            f'SELECT COUNT(*) FROM "idx_{table}_GEOMETRY"'
-        ).fetchone()[0]
-        con.close()
-        return Counter(map(repr, rows)), nidx
-
-    for layer in ("nodes_with_addresses", "connection_line"):
-        table = f"osmi_addresses_{layer}"
-        paths = export_layer_sharded(testzone_layers[layer], layer, out, shards=4)
-        assert len(paths) == 4
-        for p in paths:  # every shard is a standalone valid SpatiaLite file
-            con = sqlite3.connect(p)
-            assert con.execute(
-                "SELECT COUNT(*) FROM geometry_columns WHERE f_table_name=?",
-                (table,),
-            ).fetchone()[0] == 1
-            con.close()
-        merged = merge_sqlite_shards(paths, layer, out)
-
-        got, got_idx = contents(merged, table)
-        want, want_idx = contents(
-            os.path.join(out_single, f"{table}.sqlite"), table
-        )
-        assert got == want, layer
-        assert got_idx == want_idx, layer
-
-        # R*Tree pkids re-based correctly: pkid set == fids of rows with
-        # geometry, and each entry's xmin matches the blob MBR (rtree
-        # stores float32 — coarse tolerance)
-        con = sqlite3.connect(merged)
-        pk = {r[0] for r in con.execute(f'SELECT pkid FROM "idx_{table}_GEOMETRY"')}
-        fids = {
-            r[0]
-            for r in con.execute(
-                f'SELECT OGC_FID FROM "{table}" WHERE GEOMETRY IS NOT NULL'
-            )
-        }
-        assert pk == fids, layer
-        for blob, xmin in con.execute(
-            f'SELECT t.GEOMETRY, i.xmin FROM "{table}" t '
-            f'JOIN "idx_{table}_GEOMETRY" i ON i.pkid = t.OGC_FID LIMIT 25'
-        ):
-            assert abs(struct.unpack_from("<d", blob, 6)[0] - xmin) < 1e-4
-        con.close()
-
-
-def test_sharded_export_uri_roundtrip(testzone_layers, tmp_path_factory):
-    """file:// URIs drive the remote-filesystem path end to end: shards
-    upload through pyarrow.fs and the merge localizes them before ATTACH
-    (sqlite cannot open a URI)."""
-    from osmi_addresses_spark.io.spatialite import (
-        export_layer_sharded,
-        merge_sqlite_shards,
-    )
-
-    out = str(tmp_path_factory.mktemp("sl_uri"))
-    paths = export_layer_sharded(
-        testzone_layers["entrances"], "entrances", f"file://{out}", shards=2
-    )
-    assert len(paths) == 2 and all(p.startswith("file://") for p in paths)
-    merged = merge_sqlite_shards(paths, "entrances", out)
-    con = sqlite3.connect(merged)
-    n = con.execute("SELECT COUNT(*) FROM osmi_addresses_entrances").fetchone()[0]
-    con.close()
-    assert n == GOLDEN_COUNTS["entrances"]
-
-
-def test_sharded_export_empty_layer(spark, tmp_path):
-    """An empty layer (buildings is empty by construction) still produces
-    valid shard files and a valid zero-row merged contract file."""
+def test_export_empty_layer(spark, tmp_path):
+    """An empty layer (buildings is empty by construction) still exports
+    a valid zero-row contract file with its geometry_columns entry."""
     from pyspark.sql import functions as F
 
-    from osmi_addresses_spark.io.spatialite import (
-        export_layer_sharded,
-        merge_sqlite_shards,
-    )
+    from osmi_addresses_spark.io.spatialite import export_layer
 
     empty = spark.createDataFrame(
         [], "node_id string, lastchange string, entrance string"
@@ -392,10 +298,8 @@ def test_sharded_export_empty_layer(spark, tmp_path):
             F.struct(F.lit(0.0).alias("lon"), F.lit(0.0).alias("lat")),
         ),
     )
-    paths = export_layer_sharded(empty, "entrances", str(tmp_path), shards=2)
-    assert len(paths) == 2
-    merged = merge_sqlite_shards(paths, "entrances", str(tmp_path))
-    con = sqlite3.connect(merged)
+    p = export_layer(empty, "entrances", str(tmp_path))
+    con = sqlite3.connect(p)
     assert con.execute(
         "SELECT COUNT(*) FROM osmi_addresses_entrances"
     ).fetchone()[0] == 0

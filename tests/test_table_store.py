@@ -1,6 +1,5 @@
 """Iceberg-lite TableStore: atomic commit, lineage, resumable write_once."""
 
-import json
 import os
 
 from osmi_addresses_spark.io.table import TableStore
@@ -35,6 +34,31 @@ def test_write_once_resumes(spark, tmp_path):
     store.write_once("t2", factory, source_path=src)
     assert len(calls) == 2
     assert store.read(spark, "t2").count() == 15
+
+
+def test_write_once_sees_nested_input_change(spark, tmp_path):
+    """A partitioned input keeps its data files in subdirectories; growing
+    one of them must change the lineage, so the next write_once
+    recomputes instead of reusing the stale table."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    src = tmp_path / "src"
+    nested = src / "region=a" / "part-0.parquet"
+    nested.parent.mkdir(parents=True)
+    pq.write_table(pa.table({"id": list(range(10))}), nested)
+    store = TableStore(str(tmp_path / "warehouse"))
+    calls = []
+
+    def factory():
+        calls.append(1)
+        return spark.read.parquet(str(src))
+
+    store.write_once("t", factory, source_path=str(src))
+    pq.write_table(pa.table({"id": list(range(15))}), nested)
+    store.write_once("t", factory, source_path=str(src))
+    assert len(calls) == 2
+    assert store.read(spark, "t").count() == 15
 
 
 def test_crash_leaves_no_manifest(spark, tmp_path):
@@ -187,31 +211,6 @@ def test_vacuum_retires_old_snapshots(spark, tmp_path):
     assert store.vacuum("t", keep=1) == []  # idempotent
 
 
-def test_compact_preserves_rows_and_write_once_skip(spark, tmp_path):
-    src = tmp_path / "src"
-    df = spark.range(1000).toDF("id")
-    df.write.parquet(str(src))
-    store = TableStore(str(tmp_path / "wh"))
-    store.write_once(
-        "t", lambda: spark.read.parquet(str(src)).repartition(16),
-        source_path=str(src),
-    )
-    m1 = store.manifest("t")
-    assert sum(p["files"] for p in m1["partitions"].values()) == 16
-    store.compact(spark, "t", target_bytes=1 << 30)
-    m2 = store.manifest("t")
-    assert m2["version"] == m1["version"] + 1
-    assert sum(p["files"] for p in m2["partitions"].values()) == 1
-    got = sorted(r["id"] for r in store.read(spark, "t").collect())
-    assert got == list(range(1000))
-    # lineage carried over: a re-run's write_once still skips (no rewrite)
-    store.write_once(
-        "t", lambda: spark.read.parquet(str(src)).repartition(16),
-        source_path=str(src),
-    )
-    assert store.manifest("t")["version"] == m2["version"]
-
-
 def test_vacuum_sweeps_orphan_version_dirs(spark, tmp_path):
     """A half-written version dir from a crashed writer (never committed to
     the manifest) is reclaimed by vacuum's orphan sweep — even when no
@@ -227,88 +226,3 @@ def test_vacuum_sweeps_orphan_version_dirs(spark, tmp_path):
     assert store.vacuum("t", keep=1) == []  # nothing committed to retire
     assert not os.path.exists(orphan)  # ...but the orphan is gone
     assert store.read(spark, "t").count() == 5
-
-
-def test_merge_upserts_and_deletes_as_new_snapshot(spark, tmp_path):
-    import pytest
-
-    store = TableStore(str(tmp_path / "wh"))
-    base = spark.createDataFrame(
-        [(1, "a", 10), (2, "b", 20), (3, "c", 30)], ["k", "name", "v"]
-    )
-    store.write("t", base)
-    # upsert: replace k=2, insert k=4; delete k=3
-    ups = spark.createDataFrame([(2, "B", 200), (4, "d", 40)], ["k", "name", "v"])
-    dels = spark.createDataFrame([(3,)], ["k"])
-    store.merge(spark, "t", ups, ["k"], deletes=dels)
-    got = {(r["k"], r["name"], r["v"]) for r in store.read(spark, "t").collect()}
-    assert got == {(1, "a", 10), (2, "B", 200), (4, "d", 40)}
-    # time travel: the pre-merge snapshot is untouched
-    v1 = {(r["k"], r["name"], r["v"]) for r in store.read(spark, "t", version=1).collect()}
-    assert v1 == {(1, "a", 10), (2, "b", 20), (3, "c", 30)}
-    assert store.versions("t") == [1, 2]
-    m = store.manifest("t")
-    assert m["lineage"]["last_merge"] == {"keys": ["k"], "deletes": True}
-    # a row present in BOTH updates and deletes is deleted, not resurrected
-    store.merge(
-        spark, "t",
-        spark.createDataFrame([(4, "dd", 44)], ["k", "name", "v"]),
-        ["k"],
-        deletes=spark.createDataFrame([(4,)], ["k"]),
-    )
-    got3 = {r["k"] for r in store.read(spark, "t").collect()}
-    assert got3 == {1, 2}
-    # first merge into a missing table is a plain write; deleting from a
-    # missing table is an error
-    store.merge(spark, "fresh", base, ["k"])
-    assert store.read(spark, "fresh").count() == 3
-    with pytest.raises(KeyError):
-        store.merge(spark, "nope", ups, ["k"], deletes=dels)
-    with pytest.raises(ValueError):
-        store.merge(spark, "t", ups.selectExpr("k AS kk", "name", "v"), ["kk"])
-
-
-def test_merge_carries_partitioning_and_options(spark, tmp_path):
-    store = TableStore(str(tmp_path / "wh"))
-    base = spark.range(40).selectExpr("id AS k", "id % 4 AS part", "id * 2 AS v")
-    store.write("t", base, partition_by=["part"], options={"parquet.block.size": str(1 << 20)})
-    ups = spark.createDataFrame([(1, 1, 999)], ["k", "part", "v"])
-    store.merge(spark, "t", ups, ["k"])
-    m = store.manifest("t")
-    assert m["partition_by"] == ["part"]
-    assert m["write_options"] == {"parquet.block.size": str(1 << 20)}
-    assert any(p.startswith("part=") for p in m["partitions"])
-    got = {r["v"] for r in store.read(spark, "t").filter("k = 1").collect()}
-    assert got == {999}
-
-
-def test_merge_rejects_bad_updates(spark, tmp_path):
-    import pytest
-
-    store = TableStore(str(tmp_path / "wh"))
-    store.write("t", spark.createDataFrame([(1, "a")], ["k", "name"]))
-    with pytest.raises(ValueError, match="duplicate"):
-        store.merge(
-            spark, "t",
-            spark.createDataFrame([(2, "b"), (2, "c")], ["k", "name"]), ["k"],
-        )
-    with pytest.raises(ValueError, match="NULL"):
-        store.merge(
-            spark, "t",
-            spark.createDataFrame([(None, "b")], "k int, name string"), ["k"],
-        )
-    # first-write degenerate path records the merge lineage too
-    store.merge(spark, "fresh2", spark.createDataFrame([(1, "a")], ["k", "name"]), ["k"])
-    m = store.manifest("fresh2")
-    assert m["lineage"]["last_merge"] == {"keys": ["k"], "deletes": False}
-
-
-def test_merge_rejects_update_columns_the_table_lacks(spark, tmp_path):
-    import pytest
-
-    store = TableStore(str(tmp_path / "wh"))
-    store.write("t", spark.createDataFrame([(1, "a")], ["k", "name"]))
-    ups = spark.createDataFrame([(1, "A", 9)], ["k", "name", "extra"])
-    with pytest.raises(ValueError, match="extra"):
-        store.merge(spark, "t", ups, ["k"])
-    assert store.versions("t") == [1]

@@ -1,5 +1,6 @@
 #!/usr/bin/env python
-"""Diff two TableStore output directories layer by layer — the analog of the
+"""Diff two TableStore output directories, or two SpatiaLite export
+directories, layer by layer — the analog of the
 reference's regression-diff tooling (/root/reference/test/compare_sqlite.sh:49-96,
 /root/reference/test/create_sqlite_diff.sh:120-146), which dumps each
 SpatiaLite table from two runs and diffs row sets.
@@ -34,37 +35,16 @@ def table_names(root: str) -> set[str]:
 
 
 def sqlite_table_names(root: str) -> set[str]:
-    """Layers present as single exported files OR as sharded directories
-    (io/spatialite.export_layer_sharded writes
-    osmi_addresses_<name>/shard-*.sqlite)."""
-    names = set()
-    for f in os.listdir(root):
-        if not f.startswith("osmi_addresses_"):
-            continue
-        if f.endswith(".sqlite"):
-            names.add(f[len("osmi_addresses_"):-len(".sqlite")])
-        elif os.path.isdir(os.path.join(root, f)) and any(
-            s.endswith(".sqlite") for s in os.listdir(os.path.join(root, f))
-        ):
-            names.add(f[len("osmi_addresses_"):])
-    return names
+    """Layers present as exported osmi_addresses_<name>.sqlite files."""
+    return {
+        f[len("osmi_addresses_"):-len(".sqlite")]
+        for f in os.listdir(root)
+        if f.startswith("osmi_addresses_") and f.endswith(".sqlite")
+    }
 
 
-def _layer_sqlite_paths(root: str, name: str) -> list[str]:
-    """All .sqlite files holding a layer: [single file] for the driver-
-    streamed export, the sorted shard list for a sharded one, [] if the
-    layer is absent."""
-    single = os.path.join(root, f"osmi_addresses_{name}.sqlite")
-    if os.path.exists(single):
-        return [single]
-    shard_dir = os.path.join(root, f"osmi_addresses_{name}")
-    if os.path.isdir(shard_dir):
-        return sorted(
-            os.path.join(shard_dir, f)
-            for f in os.listdir(shard_dir)
-            if f.endswith(".sqlite")
-        )
-    return []
+def _layer_sqlite_path(root: str, name: str) -> str:
+    return os.path.join(root, f"osmi_addresses_{name}.sqlite")
 
 
 def dir_kind(root: str) -> str:
@@ -85,27 +65,23 @@ def _read_sqlite_layer(spark, root: str, name: str):
     from osmi_addresses_spark.io.spatialite import decode_blob
 
     table = f"osmi_addresses_{name}"
-    paths = _layer_sqlite_paths(root, name)
-    cols = None
+    con = sqlite3.connect(_layer_sqlite_path(root, name))
+    cols = [
+        r[1]
+        for r in con.execute(f'PRAGMA table_info("{table}")')
+        if r[1] not in ("OGC_FID", "GEOMETRY")
+    ]
+    sel = ", ".join(f'"{c}"' for c in cols) + (", " if cols else "") + "GEOMETRY"
     rows = []
-    for path in paths:  # single file, or every shard of a sharded export
-        con = sqlite3.connect(path)
-        if cols is None:
-            cols = [
-                r[1]
-                for r in con.execute(f'PRAGMA table_info("{table}")')
-                if r[1] not in ("OGC_FID", "GEOMETRY")
-            ]
-        sel = ", ".join(f'"{c}"' for c in cols) + (", " if cols else "") + "GEOMETRY"
-        for r in con.execute(f'SELECT {sel} FROM "{table}"'):
-            blob = r[-1]
-            if blob is None:
-                wkt = None
-            else:
-                kind, pts = decode_blob(blob)
-                wkt = f"{kind}(" + ",".join(f"{x!r} {y!r}" for x, y in pts) + ")"
-            rows.append((*[None if v is None else str(v) for v in r[:-1]], wkt))
-        con.close()
+    for r in con.execute(f'SELECT {sel} FROM "{table}"'):
+        blob = r[-1]
+        if blob is None:
+            wkt = None
+        else:
+            kind, pts = decode_blob(blob)
+            wkt = f"{kind}(" + ",".join(f"{x!r} {y!r}" for x, y in pts) + ")"
+        rows.append((*[None if v is None else str(v) for v in r[:-1]], wkt))
+    con.close()
     schema = ", ".join(f"`{c}` string" for c in [*cols, "geometry_wkt"])
     return spark.createDataFrame(rows, schema)
 
@@ -144,7 +120,7 @@ def diff_stores(
     geometry compared by decoded-coordinate equality). For TableStores,
     `version_a`/`version_b` time-travel each side to a committed snapshot
     — pass the SAME directory twice to diff two versions of one store
-    (e.g. pre- vs post-compaction, or yesterday's run vs today's)."""
+    (e.g. yesterday's run vs today's re-run into the same --output)."""
     kind_a, kind_b = dir_kind(dir_a), dir_kind(dir_b)
     if kind_a != kind_b:
         raise ValueError(
@@ -204,8 +180,8 @@ def _diff_sqlite(spark, dir_a: str, dir_b: str, tables=None, sample: int = 3) ->
     report: dict[str, dict] = {}
     for name in sorted(names):
         entry: dict = {"schema_match": True, "only_a": 0, "only_b": 0}
-        in_a = bool(_layer_sqlite_paths(dir_a, name))
-        in_b = bool(_layer_sqlite_paths(dir_b, name))
+        in_a = os.path.exists(_layer_sqlite_path(dir_a, name))
+        in_b = os.path.exists(_layer_sqlite_path(dir_b, name))
         if not in_a and not in_b:
             # Explicitly-requested table present in neither export: report it
             # instead of opening a nonexistent path (sqlite3.connect would
